@@ -78,9 +78,7 @@ object Classify {
   /** Memoized per (session, dir): training is an ingest-time artifact —
     * re-invocations of the registered query serve the learned table
     * (same contract as t9's vocab / sim4's IVF index). */
-  private val nbCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Map[String, Double]]]()
+  private val nbCache = SessionMemo[String, Map[String, Double]]()
 
   /** T12 — the registered classifier report: train en-vs-rest on the
     * corpus itself (the synthetic langs share one vocabulary, so the
@@ -89,9 +87,8 @@ object Classify {
     * arithmetic against DuckDB). Per true lang: docs, predicted-en
     * count, and the score spread. */
   def t12NbClassifier(spark: SparkSession, dir: String): DataFrame = {
-    val logOdds = Similarity.perSession(nbCache, spark)
-      .getOrElseUpdate(dir, nbLogOddsOn(
-        Tables.documents(spark, dir), col("lang") === "en", maxVocab = 65536))
+    val logOdds = nbCache.getOrBuild(spark, dir)(nbLogOddsOn(
+      Tables.documents(spark, dir), col("lang") === "en", maxVocab = 65536))
     nbScoreOn(Tables.documents(spark, dir), logOdds)
       .groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
@@ -113,9 +110,8 @@ object Classify {
     * round to 1e-4 BEFORE the histogram — the same device that makes
     * the threshold exact and engine-portable. */
   def d30NbCutoff(spark: SparkSession, dir: String): DataFrame = {
-    val logOdds = Similarity.perSession(nbCache, spark)
-      .getOrElseUpdate(dir, nbLogOddsOn(
-        Tables.documents(spark, dir), col("lang") === "en", maxVocab = 65536))
+    val logOdds = nbCache.getOrBuild(spark, dir)(nbLogOddsOn(
+      Tables.documents(spark, dir), col("lang") === "en", maxVocab = 65536))
     Curate.cutoffOn(
       nbScoreOn(Tables.documents(spark, dir), logOdds)
         .withColumn("score", round(col("score"), 4)),
@@ -127,9 +123,8 @@ object Classify {
   /** The session-memoized NB scorer with the columns the eval harness
     * needs (truth + prediction under t12's exact rounded rule). */
   private def nbScored(spark: SparkSession, dir: String): DataFrame = {
-    val logOdds = Similarity.perSession(nbCache, spark)
-      .getOrElseUpdate(dir, nbLogOddsOn(
-        Tables.documents(spark, dir), col("lang") === "en", maxVocab = 65536))
+    val logOdds = nbCache.getOrBuild(spark, dir)(nbLogOddsOn(
+      Tables.documents(spark, dir), col("lang") === "en", maxVocab = 65536))
     nbScoreOn(Tables.documents(spark, dir), logOdds)
   }
 
@@ -286,9 +281,7 @@ object Classify {
       .drop("tk")
   }
 
-  private val dsirCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Array[Double]]]()
+  private val dsirCache = SessionMemo[String, Array[Double]]()
 
   /** D20 — registered DSIR report: weight every doc against the
     * target-vs-raw bucket ratios, then per source report the weight
@@ -301,9 +294,8 @@ object Classify {
     * comparison round first so a libm ulp can't flip a count. The
     * mean rides in as a broadcast singleton (the d11 device). */
   def d20DsirWeights(spark: SparkSession, dir: String): DataFrame = {
-    val lr = Similarity.perSession(dsirCache, spark)
-      .getOrElseUpdate(dir, dsirLogRatiosOn(
-        Tables.documents(spark, dir), col("source").isin(DsirTarget: _*)))
+    val lr = dsirCache.getOrBuild(spark, dir)(dsirLogRatiosOn(
+      Tables.documents(spark, dir), col("source").isin(DsirTarget: _*)))
     val weighted = dsirWeighted(Tables.documents(spark, dir), lr)
     weighted
       .crossJoin(broadcast(weighted.agg(avg(col("weight")).as("mw"))))
@@ -313,13 +305,6 @@ object Classify {
         sum(when(round(col("weight"), 4) > round(col("mw"), 4), 1L)
           .otherwise(0L)).as("n_selected"))
       .orderBy(col("source"))
-  }
-
-  /** Drop this session's learned tables (see
-    * [[Similarity.invalidateCaches]], which fans out here). */
-  private[ext] def invalidateCaches(spark: SparkSession): Unit = {
-    nbCache.synchronized(nbCache.remove(spark))
-    dsirCache.synchronized(dsirCache.remove(spark))
   }
 
   // ---------------------------------------------------------- registry

@@ -223,21 +223,10 @@ object Dedup {
 
   /** Memoized per-(session, dir) documents row count — sizing
     * [[blocksFor]] needs |corpus| but must not pay a count() job per
-    * query invocation. Same immutability contract as
-    * `Similarity.corpusSize`; refreshed by
-    * [[graft.ext.Similarity.invalidateCaches]]. Weak session keys: a
-    * stopped session's entries become collectable. */
-  private val docCountCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Long]]()
+    * query invocation. */
+  private val docCountCache = SessionMemo[String, Long]()
   private[graft] def docsCount(spark: SparkSession, dir: String): Long =
-    Similarity.perSession(docCountCache, spark)
-      .getOrElseUpdate(dir, Tables.documents(spark, dir).count())
-  private[ext] def invalidateCaches(spark: SparkSession): Unit = {
-    docCountCache.synchronized(docCountCache.remove(spark))
-    bandIndexCache.synchronized(bandIndexCache.remove(spark))
-    d49Cache.synchronized(d49Cache.remove(spark))
-  }
+    docCountCache.getOrBuild(spark, dir)(Tables.documents(spark, dir).count())
 
   /** Block boundaries for a b-block decomposition of the 64-bit
     * signature: (shift, width) per block, widths differing by at most
@@ -585,20 +574,10 @@ object Dedup {
   /** Same iteration over an ALREADY-materialized (checkpointed/cached)
     * pair frame — the entry point for a caller that pinned the pairs for
     * its own reuse ([[dedupedCorpus]]), so the pair set isn't
-    * materialized and stored twice.
-    *
-    * `checkpointEvery` sets the lineage-truncation cadence of the
-    * distributed path, the [[graft.ext.Graph.pageRank]] contract:
-    * labels are cadence-INVARIANT (identical joins over identical
-    * data — only where the plan is cut changes), the convergence sum
-    * still runs every round, and un-pinned rounds re-execute their
-    * join lineage from the last pin inside the next sum job. Exists
-    * for the d12 cadence probe ([[graft.D12CadenceProbe]], r17
-    * verdict ask #2); stays at 1 unless a probe shows a gated win. */
+    * materialized and stored twice. */
   private[ext] def connectedComponentsPinned(nodes: DataFrame, p: DataFrame,
                                              maxIter: Int = 20,
-                                             smallGraphEdges: Long = 100000L,
-                                             checkpointEvery: Int = 1): DataFrame = {
+                                             smallGraphEdges: Long = 100000L): DataFrame = {
     // Normalize ids to long up front: both paths then agree on output
     // types, and integer-typed pair frames can't ClassCast in the
     // driver path's Row.getLong.
@@ -690,12 +669,6 @@ object Dedup {
         .getOrElse(java.math.BigDecimal.ZERO)
       (cp, s)
     }
-    // un-pinned rounds (cadence > 1) still measure convergence — the
-    // sum just runs over the growing lineage instead of a fresh pin
-    def plainSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
-      (df, Option(
-        df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO))
     var (labels, prevSum) = checkpointAndSum(initAll)
     var converged = false
     var i = 0
@@ -716,9 +689,7 @@ object Dedup {
         .select(col("node"),
           least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
       // Pointer jumping done — checkpoint + convergence measure in one job.
-      val (updated, curSum) =
-        if ((i + 1) % checkpointEvery == 0) checkpointAndSum(jumped)
-        else plainSum(jumped)
+      val (updated, curSum) = checkpointAndSum(jumped)
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       labels = updated
@@ -781,14 +752,7 @@ object Dedup {
     * can't be non-singleton, so the (typically tiny) dup graph iterates
     * without dragging the full corpus through every round; the corpus is
     * touched once, by the final anti-join against the drop set. */
-  def dedupedCorpus(documents: DataFrame, pairs: DataFrame): DataFrame =
-    dedupedCorpusCadence(documents, pairs, checkpointEvery = 1)
-
-  /** [[dedupedCorpus]] with an explicit components checkpoint cadence —
-    * the [[graft.D12CadenceProbe]] entry point (r17 verdict ask #2);
-    * output is cadence-invariant, only the lineage cut points move. */
-  private[graft] def dedupedCorpusCadence(documents: DataFrame,
-      pairs: DataFrame, checkpointEvery: Int): DataFrame = {
+  def dedupedCorpus(documents: DataFrame, pairs: DataFrame): DataFrame = {
     // Checkpoint the pair pipeline ONCE before fanning out: `incident`
     // and the component iteration both consume it, and without this the
     // first label materialization would re-execute the entire upstream
@@ -798,8 +762,7 @@ object Dedup {
     val p = pairs.localCheckpoint(true)
     val incident = p.select(col("id_a").as("node"))
       .union(p.select(col("id_b").as("node"))).distinct()
-    val drop = connectedComponentsPinned(incident, p,
-      checkpointEvery = checkpointEvery)
+    val drop = connectedComponentsPinned(incident, p)
       .filter(col("node") =!= col("label"))
       .select(col("node").as("doc_id"))
     documents.join(drop, Seq("doc_id"), "left_anti")
@@ -962,44 +925,31 @@ object Dedup {
     jaccardVerifySets(candidates, setsA, setsB, threshold)
   }
 
-  /** Memoized per-(session, dir) D18 index registration: the registered
-    * harness query must not rebuild the index on every invocation —
-    * ingest runs once, serving is the measured path (same memo contract
-    * as sim4's IVF index). */
   /** Memoized-per-(session, dir) exact-Jaccard pair graph — d5's bounded
     * kernel materialized ONCE and served to every consumer (d6 closure,
     * d23 keep-best, d27 histogram, d36 quality audit). In production
     * the near-dup pair graph is an ingest artifact computed by the
     * dedup pass and read by every downstream audit — rebuilding it per
     * query would bill the candidate-generation cross product four
-    * times. Same memo contract as the IVF/band indexes (immutable dirs,
-    * weak session keys); d5's own registered query stays un-memoized —
-    * its bench line IS the build cost, these lines are serving. */
-  // The cached value is a temp-view NAME (plain String, bandIndexCache's
-  // contract), never the DataFrame itself: a cached frame strongly
-  // references its SparkSession through QueryExecution, and WeakHashMap
-  // VALUES hold strong refs — so a frame-valued entry would pin the
-  // weak session key (and the checkpoint blocks) forever, defeating the
-  // weak-key contract. The view (and through it the checkpointed plan)
-  // lives in the session's own catalog and dies with the session.
-  private val pairGraphCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+    * times. d5's own registered query stays un-memoized — its bench
+    * line IS the build cost, these lines are serving. */
+  private val pairGraphCache = SessionMemo[String, String]()
   private[graft] def pairGraphFor(spark: SparkSession, dir: String): DataFrame = {
-    val view = Similarity.perSession(pairGraphCache, spark).getOrElseUpdate(dir, {
+    val view = pairGraphCache.getOrBuild(spark, dir) {
       val name = "d5pairs_" + Similarity.dirTag(dir)
       d5NgramJaccard(spark, dir).localCheckpoint(true)
         .createOrReplaceTempView(name)
       name
-    })
+    }
     spark.table(view)
   }
 
-  private val bandIndexCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  /** Memoized per-(session, dir) D18 index registration: the registered
+    * harness query must not rebuild the index on every invocation —
+    * ingest runs once, serving is the measured path. */
+  private val bandIndexCache = SessionMemo[String, String]()
   private[graft] def bandIndexFor(spark: SparkSession, dir: String): String =
-    Similarity.perSession(bandIndexCache, spark).getOrElseUpdate(dir, {
+    bandIndexCache.getOrBuild(spark, dir) {
       // Table name derived from the FULL dir (sanitized), not a 32-bit
       // hash: a hash collision between two served dirs would silently
       // dedup one dir's batch against the other's index.
@@ -1008,7 +958,7 @@ object Dedup {
         Tables.documents(spark, dir).filter(col("doc_id") % Curate.BenchMod =!= 0),
         name)
       name
-    })
+    }
 
   /** D18 — incremental dedup report: treat the id-mod slice as today's
     * batch (same convention as d10/d15's bench split), dedup it against
@@ -1077,41 +1027,37 @@ object Dedup {
     * ask #2), so the ~49–87 s brute-truth build runs once per corpus
     * FINGERPRINT — every later session, including every future JVM,
     * pays one tiny parquet read. The per-(session, dir) memo below
-    * only skips the store round-trip within a session — plain tuples,
-    * no frame pinning the weak session key. The bench's
+    * only skips the store round-trip within a session. The bench's
     * `warmState("d49-card")` prices whichever of build/load the store
     * state implies; IndexStoreSpec pins the fresh-session zero-build
     * serve. */
   private val d49Cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        Seq[(String, Long, Long, Long, Double)]]]()
+    SessionMemo[String, Seq[(String, Long, Long, Long, Double)]]()
 
   def d49DedupScorecard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.perSession(d49Cache, spark)
-      .getOrElseUpdate(dir, {
-        // Cross-SESSION persistence (r14 verdict ask #2): the card is
-        // a deterministic once-per-corpus audit artifact whose inputs
-        // are exactly the fingerprint-keyed tables the IndexStore
-        // already versions — so it publishes there too, keyed over
-        // BOTH source tables (media derives from documents; the
-        // semantic row from embeddings). A fresh JVM serves it with
-        // one tiny parquet read instead of re-paying the ~49–87 s
-        // brute-truth build; the session memo above only skips the
-        // store round-trip.
-        val served = IndexStore.loadOrBuild(spark, dir,
-          Seq("documents", "embeddings"), "d49card") {
-          Seq("card" -> d49Compute(spark, dir).toDF("method",
-            "n_true_pairs", "n_served_pairs", "n_hit",
-            "candidate_recall"))
-        }("card")
-        served.select(col("method"), col("n_true_pairs"),
-            col("n_served_pairs"), col("n_hit"), col("candidate_recall"))
-          .collect().toSeq
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getDouble(4)))
-      })
+    d49Cache.getOrBuild(spark, dir) {
+      // Cross-SESSION persistence (r14 verdict ask #2): the card is
+      // a deterministic once-per-corpus audit artifact whose inputs
+      // are exactly the fingerprint-keyed tables the IndexStore
+      // already versions — so it publishes there too, keyed over
+      // BOTH source tables (media derives from documents; the
+      // semantic row from embeddings). A fresh JVM serves it with
+      // one tiny parquet read instead of re-paying the ~49–87 s
+      // brute-truth build; the session memo above only skips the
+      // store round-trip.
+      val served = IndexStore.loadOrBuild(spark, dir,
+        Seq("documents", "embeddings"), "d49card") {
+        Seq("card" -> d49Compute(spark, dir).toDF("method",
+          "n_true_pairs", "n_served_pairs", "n_hit",
+          "candidate_recall"))
+      }("card")
+      served.select(col("method"), col("n_true_pairs"),
+          col("n_served_pairs"), col("n_hit"), col("candidate_recall"))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getDouble(4)))
+    }
       .toDF("method", "n_true_pairs", "n_served_pairs", "n_hit",
         "candidate_recall")
       .orderBy(col("candidate_recall").desc, col("method"))

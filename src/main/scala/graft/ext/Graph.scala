@@ -28,9 +28,7 @@ import graft.Tables
   */
 object Graph {
 
-  private val graphCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+  private val graphCache = SessionMemo[String, (String, String)]()
 
   /** The co-presence graph as a SHARED ingest artifact: all five
     * graph-tier queries (g1 ranks it, g2 counts its triangles, g3 its
@@ -40,25 +38,23 @@ object Graph {
     * runs ONCE per (session, dir) — the ivf/pq memoization discipline:
     * eager `localCheckpoint` pins node and edge frames, the temp-view
     * name carries a dir hash so distinct dirs cannot collide (r10
-    * advice), and a racing second builder just builds a redundant
-    * correct copy. At 100 TB this is the difference between one graph
+    * advice). At 100 TB this is the difference between one graph
     * materialization and five. Returns (nodes(node), edges(user_a,
     * user_b)) — nodes carries ISOLATED users too (sessioned but never
     * co-present), which g5's census must count as singletons. */
   private[graft] def graphFor(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val (nv, ev) = Similarity.perSession(graphCache, spark)
-      .getOrElseUpdate(dir, {
-        val spans = WindowFns.sessionSpans(spark, dir)
-        val nodesName = "graph_nodes_" + Similarity.dirTag(dir)
-        val edgesName = "graph_edges_" + Similarity.dirTag(dir)
-        spans.select(col("user_id").as("node")).distinct()
-          .localCheckpoint(true).createOrReplaceTempView(nodesName)
-        Joins.allOverlapPairs(spans)
-          .select(col("user_a"), col("user_b"))
-          .localCheckpoint(true).createOrReplaceTempView(edgesName)
-        (nodesName, edgesName)
-      })
+    val (nv, ev) = graphCache.getOrBuild(spark, dir) {
+      val spans = WindowFns.sessionSpans(spark, dir)
+      val nodesName = "graph_nodes_" + Similarity.dirTag(dir)
+      val edgesName = "graph_edges_" + Similarity.dirTag(dir)
+      spans.select(col("user_id").as("node")).distinct()
+        .localCheckpoint(true).createOrReplaceTempView(nodesName)
+      Joins.allOverlapPairs(spans)
+        .select(col("user_a"), col("user_b"))
+        .localCheckpoint(true).createOrReplaceTempView(edgesName)
+      (nodesName, edgesName)
+    }
     (spark.table(nv), spark.table(ev))
   }
 
@@ -74,43 +70,29 @@ object Graph {
     * aggregate, so it materializes once per session instead of once
     * per consumer invocation. Each consumer's own verb (triangle
     * join, moments, regression, cc histogram) stays in its plan. */
-  private val coDegCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val coDegCache = SessionMemo[String, String]()
   private def coDegFor(spark: SparkSession, dir: String): DataFrame = {
-    val view = Similarity.perSession(coDegCache, spark)
-      .getOrElseUpdate(dir, {
-        val name = "graph_deg_" + Similarity.dirTag(dir)
-        degreesOf(canonEdges(spark, dir))
-          .localCheckpoint(true).createOrReplaceTempView(name)
-        name
-      })
+    val view = coDegCache.getOrBuild(spark, dir) {
+      val name = "graph_deg_" + Similarity.dirTag(dir)
+      degreesOf(canonEdges(spark, dir))
+        .localCheckpoint(true).createOrReplaceTempView(name)
+      name
+    }
     spark.table(view)
   }
 
   /** The degree-ordered oriented frame of the memoized canonical
     * edges (the Chiba–Nishizeki orientation g2 and g11 both build),
     * pinned per (session, dir) for the same reason. */
-  private val coOrientedCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val coOrientedCache = SessionMemo[String, String]()
   private def coOrientedFor(spark: SparkSession, dir: String): DataFrame = {
-    val view = Similarity.perSession(coOrientedCache, spark)
-      .getOrElseUpdate(dir, {
-        val name = "graph_oriented_" + Similarity.dirTag(dir)
-        orientedOf(canonEdges(spark, dir), coDegFor(spark, dir))
-          .localCheckpoint(true).createOrReplaceTempView(name)
-        name
-      })
+    val view = coOrientedCache.getOrBuild(spark, dir) {
+      val name = "graph_oriented_" + Similarity.dirTag(dir)
+      orientedOf(canonEdges(spark, dir), coDegFor(spark, dir))
+        .localCheckpoint(true).createOrReplaceTempView(name)
+      name
+    }
     spark.table(view)
-  }
-
-  /** Drop this session's memoized graph (see
-    * [[Similarity.invalidateCaches]], which fans out here). */
-  private[ext] def invalidateCaches(spark: SparkSession): Unit = {
-    graphCache.synchronized(graphCache.remove(spark))
-    coDegCache.synchronized(coDegCache.remove(spark))
-    coOrientedCache.synchronized(coOrientedCache.remove(spark))
   }
 
   /** Fixed-iteration PageRank over an undirected edge list
@@ -120,10 +102,10 @@ object Graph {
   /** `checkpointEvery` sets the eager-materialization cadence of the
     * iterate (1 = every round, the default; k = every k-th round, with
     * the final round ALWAYS checkpointed so the serve plan stays a
-    * scan of the pinned fixpoint). Exists for the cadence probe
-    * ([[graft.GraphCadenceProbe]]): values are cadence-invariant (the
+    * scan of the pinned fixpoint). Values are cadence-invariant (the
     * recurrence is the same dataflow either way), only the
-    * materialize-vs-recompute trade moves. */
+    * materialize-vs-recompute trade moves; the cadence measurements
+    * are recorded in BENCH_LOCAL_r13_graph_cadence.json. */
   /** `convergeTol`: when set, each round ALSO measures the total rank
     * movement (Σ|rank_i − rank_{i−1}|, one node-sized join + agg) and
     * the loop exits early once it drops below the tolerance — the
@@ -660,7 +642,8 @@ object Graph {
     // extra pairs checkpoint inside connectedComponents re-materializes
     // an already-materialized frame. The r21 probe read the pinned
     // route slower (1.39/1.40 → 1.57/1.51) — re-probed in r22 AFTER the
-    // session-span memo landed (GraphR22Probe, 5 reps, identical rows):
+    // session-span memo landed (OPTIMIZATION_r22.md, 5 reps, identical
+    // rows):
     // sf0.1 reg 1.497/1.635 vs pinned 1.122/1.294 (0.75× min), 3×
     // disjoint-graph corpus reg 1.613/1.867 vs pinned 1.411/1.426
     // (0.87× min). Adopted; the checkpointing public kernel below stays
@@ -851,8 +834,8 @@ object Graph {
       // the pinned frame carries the previous label, so the probe is a
       // scan of the materialized frame instead of its own join job.
       // The r21 probe read this a wash (1.665/1.940 → 1.667/1.785);
-      // re-probed in r22 after the session-span memo (GraphR22Probe,
-      // 5 reps, identical rows): sf0.1 reg 1.581/1.637 vs fused
+      // re-probed in r22 after the session-span memo
+      // (OPTIMIZATION_r22.md, 5 reps, identical rows): sf0.1 reg 1.581/1.637 vs fused
       // 1.420/1.483 (0.90× min), 3× disjoint-graph corpus reg
       // 2.057/2.210 vs fused 1.896/1.976 (0.92× min). Labels are
       // unchanged by construction — the join only WIDENS the pinned

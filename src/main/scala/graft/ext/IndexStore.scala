@@ -43,11 +43,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    shared store. Bump it on ANY training/layout change and the old
   *    publishes become unreachable, exactly like a rewritten dataset.
   *  - publish is complete-or-invisible: artifacts build in a
-  *    `.tmp<pid>` sibling, the marker is written last INSIDE the tmp
-  *    dir, and the tmp dir moves to the final path — a concurrent
-  *    builder in another process either wins the move or discards its
-  *    copy and reads the winner's; a reader that arrives mid-copy on a
-  *    non-atomic store sees no marker and does not load.
+  *    `.tmp<pid>_<nonce>` sibling (the per-build nonce keeps two
+  *    sessions of one JVM out of each other's tmp dir), the marker is
+  *    written last INSIDE the tmp dir, and the tmp dir moves to the
+  *    final path — a concurrent builder either wins the move or
+  *    discards its copy and reads the winner's; a reader that arrives
+  *    mid-copy on a non-atomic store sees no marker and does not load.
   *
   * [[builds]] records every actual build run; the IndexStoreSpec
   * "fresh session serves with zero training" pin reads it, which keeps
@@ -82,25 +83,21 @@ object IndexStore {
     * process lifetime. */
   val builds = new java.util.concurrent.CopyOnWriteArrayList[String]()
 
+  private val buildNonce = new java.util.concurrent.atomic.AtomicLong()
+
   /** (dir, table) pairs this session has served through the store —
     * lets [[Similarity.invalidateCaches]] drop the published indexes
     * for everything the session was serving (advisor r13: the session
     * memo cleared but the store kept serving a stale publish whenever
-    * an in-place rewrite preserved file metadata). Weak session keys,
-    * same lifetime contract as every per-session memo. */
-  private val servedBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), Unit]]()
+    * an in-place rewrite preserved file metadata). */
+  private val servedBySession = SessionMemo[(String, String), Unit]()
 
   /** Drop every published index for each (dir, table) this session has
     * served — the store half of [[Similarity.invalidateCaches]]. */
   def invalidateServed(spark: SparkSession): Unit = {
-    val served = servedBySession.synchronized {
-      Option(servedBySession.remove(spark))
-    }
-    served.foreach(_.keys.foreach { case (d, t) =>
+    servedBySession.remove(spark)(_ => true).foreach { case (d, t) =>
       invalidate(spark, d, t)
-    })
+    }
   }
 
   /** Content fingerprint of `<dir>/<table>.parquet` from file metadata
@@ -178,8 +175,7 @@ object IndexStore {
   def loadOrBuild(spark: SparkSession, dir: String, tables: Seq[String],
                   name: String)(build: => Seq[(String, DataFrame)])
       : Map[String, DataFrame] = {
-    tables.foreach(t => Similarity.perSession(servedBySession, spark)
-      .update((dir, t), ()))
+    tables.foreach(t => servedBySession.getOrBuild(spark, (dir, t))(()))
     val dsRoot = datasetRoot(spark, dir, tables)
     val path = new Path(dsRoot, s"${name}_v$FormatVersion")
     val fs = path.getFileSystem(hadoopConf(spark))
@@ -187,7 +183,8 @@ object IndexStore {
       builds.add(s"$name@$dir")
       val parts = build
       val tmp = new Path(path.getParent,
-        path.getName + ".tmp" + ProcessHandle.current().pid())
+        path.getName + ".tmp" + ProcessHandle.current().pid() + "_" +
+          buildNonce.incrementAndGet())
       parts.foreach { case (sub, df) =>
         df.write.mode("overwrite").parquet(new Path(tmp, sub).toString)
       }
@@ -234,7 +231,7 @@ object IndexStore {
     val fs = path.getFileSystem(hadoopConf(spark))
     if (!fs.exists(new Path(path, OkMarker))) None
     else {
-      Similarity.perSession(servedBySession, spark).update((dir, table), ())
+      servedBySession.getOrBuild(spark, (dir, table))(())
       Some(fs.listStatus(path).toSeq
         .filter(_.isDirectory)
         .filterNot(_.getPath.getName.contains(".tmp"))

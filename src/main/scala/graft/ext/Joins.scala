@@ -397,15 +397,12 @@ object Joins {
   }
 
   /** Memoized per (session, dir): the bucketed orders/customer table
-    * NAMES for j11 (the bandIndexCache discipline — cache plain strings,
-    * never a DataFrame, so the weak session key can actually collect). */
-  private val bucketedCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+    * NAMES for j11. */
+  private val bucketedCache = SessionMemo[String, (String, String)]()
 
   private[graft] def bucketedPairFor(spark: SparkSession,
                                      dir: String): (String, String) =
-    Similarity.perSession(bucketedCache, spark).getOrElseUpdate(dir, {
+    bucketedCache.getOrBuild(spark, dir) {
       val tag = Similarity.dirTag(dir)
       val (o, c) = (s"j11ord_$tag", s"j11cust_$tag")
       graft.sources.Sources.writeBucketed(
@@ -417,7 +414,7 @@ object Joins {
           .select(col("c_custkey"), col("c_mktsegment")),
         8, "c_custkey", c)
       (o, c)
-    })
+    }
 
   /** J11 — the bucketed CO-LOCATED join as a registered query: orders
     * and customer persisted bucketed by their join keys (ONCE per
@@ -547,12 +544,10 @@ object Joins {
     * ONCE per (session, dir) — the j11 ingest/serve split applied to
     * PARTITION layout instead of bucket layout; the memo carries both
     * table names. */
-  private val partitionedCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+  private val partitionedCache = SessionMemo[String, (String, String)]()
   private[graft] def partitionedOrdersFor(spark: SparkSession,
                                           dir: String): (String, String) =
-    Similarity.perSession(partitionedCache, spark).getOrElseUpdate(dir, {
+    partitionedCache.getOrBuild(spark, dir) {
       val tag = Similarity.dirTag(dir)
       val (t, d) = (s"j14ord_$tag", s"j14dim_$tag")
       val withMonth = Tables.orders(spark, dir)
@@ -575,7 +570,7 @@ object Joins {
           (floor((col("o_month") % 100 - 1) / 3) + 1).cast("int"))
       graft.sources.Sources.writeTable(dim, d)
       (t, d)
-    })
+    }
 
   /** J14 — dynamic-partition-pruned star join: the fact table persisted
     * partitioned by month (one directory per month — the conformed

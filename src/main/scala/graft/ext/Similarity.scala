@@ -34,15 +34,8 @@ object Similarity {
 
   /** Memoized per-(session, dir) embeddings row count: sizing the LSH
     * plane count ([[planesFor]]) needs |corpus| but must not pay a full
-    * count() job on every query invocation. CONTRACT: a dir's data is
-    * immutable while a session serves it (the ingest/serve split every
-    * ANN deployment already assumes) — after rewriting a dir in place,
-    * call [[invalidateCaches]]. Sessions are WEAK keys: a stopped,
-    * dereferenced session's entries (and any checkpoint blocks they pin)
-    * become collectable instead of leaking for the JVM lifetime. */
-  private val sizeCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Long]]()
+    * count() job on every query invocation ([[SessionMemo]] contract). */
+  private val sizeCache = SessionMemo[String, Long]()
 
   /** Collision-proof temp-view/table name tag for a data dir: the
     * readable sanitized form PLUS a hex hash of the RAW string. The
@@ -54,45 +47,20 @@ object Similarity {
   private[graft] def dirTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_") +
       f"_${dir.hashCode & 0xffffffffL}%08x"
-  private[ext] def perSession[K, V](
-      cache: java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[K, V]],
-      spark: SparkSession): scala.collection.concurrent.TrieMap[K, V] =
-    cache.synchronized {
-      var m = cache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[K, V]
-        cache.put(spark, m)
-      }
-      m
-    }
   private[graft] def corpusSize(spark: SparkSession, dir: String): Long =
-    perSession(sizeCache, spark).getOrElseUpdate(dir,
-      Tables.embeddings(spark, dir).count())
+    sizeCache.getOrBuild(spark, dir)(Tables.embeddings(spark, dir).count())
 
-  /** Drop this session's memoized corpus sizes (embeddings AND
-    * documents) and IVF indexes — the one public invalidation entry
-    * point; call after rewriting a served dir's data in place. Also
-    * drops the [[IndexStore]] publishes for every (dir, table) this
-    * session served through the store: an in-place rewrite that
-    * preserves file names/sizes/mtimes leaves the store's dataset
-    * fingerprint unchanged, so clearing the session memo alone would
-    * let the NEXT serve reload the stale published index (advisor
-    * r13 — the exact case this doc names). */
+  /** Drop every [[SessionMemo]] this session built — the one public
+    * invalidation entry point; call after rewriting a served dir's
+    * data in place. Also drops the [[IndexStore]] publishes for every
+    * (dir, table) this session served through the store: an in-place
+    * rewrite that preserves file names/sizes/mtimes leaves the store's
+    * dataset fingerprint unchanged, so clearing the session memos
+    * alone would let the NEXT serve reload the stale published index
+    * (advisor r13 — the exact case this doc names). */
   def invalidateCaches(spark: SparkSession): Unit = {
-    sizeCache.synchronized(sizeCache.remove(spark))
-    covSketchCache.synchronized(covSketchCache.remove(spark))
-    knnTruthCache.synchronized(knnTruthCache.remove(spark))
-    gateCache.synchronized(gateCache.remove(spark))
-    ivfCache.synchronized(ivfCache.remove(spark))
-    commitCardCache.synchronized(commitCardCache.remove(spark))
-    pqCache.synchronized(pqCache.remove(spark))
     IndexStore.invalidateServed(spark)
-    Dedup.invalidateCaches(spark)
-    Classify.invalidateCaches(spark)
-    TextStats.invalidateCaches(spark)
-    Graph.invalidateCaches(spark)
-    WindowFns.invalidateCaches(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   /** SIM1 — brute-force cosine top-k vs the vec_id=0 query vector. */
@@ -247,16 +215,8 @@ object Similarity {
     // of running seven corpus scans back to back. Each method's result
     // set is exactly the sequential one (the methods never read each
     // other); the scorecard arithmetic below waits for all of them.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val byMethod: Map[String, Set[Long]] = try {
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(methods.map { case (name, q) =>
-          scala.concurrent.Future(name -> ids(q))
-        }),
-        scala.concurrent.duration.Duration.Inf).toMap
-    } finally pool.shutdown()
+    val byMethod: Map[String, Set[Long]] = graft.Parallel.parallelLegs(4)(
+      methods.map { case (name, q) => () => name -> ids(q) }).toMap
     val truth = byMethod("brute")
     methods.map { case (name, _) =>
       val got = byMethod(name)
@@ -689,8 +649,7 @@ object Similarity {
     // vanished (interrupted transition being re-attempted elsewhere,
     // or an invalidation), fall through to the slow path, which
     // re-audits.
-    val cardMemo = perSession(commitCardCache, spark)
-    cardMemo.get((dir, k)) match {
+    commitCardCache.get(spark, (dir, k)) match {
       // The memo is valid only while BOTH markers hold (advisor r19):
       // the receipt's AND the committed generation's — if ivf_g2_k<k>
       // was deleted out-of-band while the receipt survived,
@@ -705,7 +664,7 @@ object Similarity {
             committedIvfName(k)) =>
         return card(ivfIndexFor(spark, dir, k).assigned, split,
           flagsDf(firstCommit = false, sweptNow = 0, pf))
-      case Some(_) => cardMemo.remove((dir, k)): Unit
+      case Some(_) => commitCardCache.remove(spark)(_ == ((dir, k))): Unit
       case None =>
     }
     val firstCommit = IndexStore
@@ -791,7 +750,7 @@ object Similarity {
     val pf = CommitFlags(fr.getBoolean(0), fr.getBoolean(2),
       fr.getBoolean(3), fr.getBoolean(4), fr.getDouble(5),
       fr.getDouble(6))
-    cardMemo.update((dir, k), (split, pf))
+    commitCardCache.getOrBuild(spark, (dir, k))((split, pf))
     card(committed("assigned"), split, flagsDf(firstCommit, sweptNow, pf))
   }
 
@@ -807,9 +766,7 @@ object Similarity {
     * marker on every read; dropped by [[dropIvfMemo]] and
     * [[invalidateCaches]]. */
   private val commitCardCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int),
-        (Long, CommitFlags)]]()
+    SessionMemo[(String, Int), (Long, CommitFlags)]()
 
   /** Store name of sim31's transition RECEIPT — the commit-time audit
     * artifact (verified flags + the swept set) published beside the
@@ -859,13 +816,11 @@ object Similarity {
     * [[invalidateCaches]] drops the memo with the other corpus memos;
     * store invalidation drops the artifact. */
   private val gateCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String),
-        (Double, Double, Boolean)]]()
+    SessionMemo[(String, String), (Double, Double, Boolean)]()
   private[graft] def spectrumGateCached(spark: SparkSession, dir: String)
       : (Double, Double, Boolean) = {
     val fp = IndexStore.fingerprint(spark, dir, "embeddings")
-    perSession(gateCache, spark).getOrElseUpdate((dir, fp), {
+    gateCache.getOrBuild(spark, (dir, fp)) {
       import spark.implicits._
       val verdict = IndexStore.loadOrBuild(spark, dir, "embeddings",
         SpectrumVerdictName) {
@@ -875,7 +830,7 @@ object Similarity {
       }
       val r = verdict("verdict").collect().head
       (r.getDouble(0), r.getDouble(1), r.getBoolean(2))
-    })
+    }
   }
 
   /** VETO a cosine-geometry consumer on a collapsed corpus (r18
@@ -898,10 +853,8 @@ object Similarity {
     * verb's session-side cutover ([[sim31RetrainCommit]]); fresh
     * sessions cut over through the committed artifact's marker alone. */
   private[graft] def dropIvfMemo(spark: SparkSession, dir: String): Unit = {
-    val m = perSession(ivfCache, spark)
-    m.keys.filter(_._1 == dir).toSeq.foreach(m.remove)
-    val c = perSession(commitCardCache, spark)
-    c.keys.filter(_._1 == dir).toSeq.foreach(c.remove)
+    ivfCache.remove(spark)(_._1 == dir)
+    commitCardCache.remove(spark)(_._1 == dir): Unit
   }
 
   /** The generation boundary sim30 prices and sim31 commits: the
@@ -1293,33 +1246,21 @@ object Similarity {
     * re-assignment. This is the 100 TB contract: an ANN index is built by
     * an ingest job and serves a query STREAM; rebuilding the quantizer
     * per query would make query cost O(corpus), which no scale survives.
-    * Keyed by session so separate sessions never share lineage; the
-    * testdata dirs are immutable for a session's lifetime, matching the
-    * memoization contract (same as [[corpusSize]]; refresh with
-    * [[invalidateCaches]]); weak session keys stop a dead session from
-    * pinning its checkpointed index forever. */
-  // The cached value is (temp-view NAME, centers) — never the IvfIndex
-  // itself: its `assigned` DataFrame strongly references the
-  // SparkSession through QueryExecution, and WeakHashMap VALUES hold
-  // strong refs, so an index-valued entry would pin the weak session
-  // key (and the checkpoint blocks) forever (the pairGraphFor
-  // contract). The view lives in the session's own catalog and dies
-  // with it; the centers are plain arrays.
+    * Keyed by session so separate sessions never share lineage
+    * ([[SessionMemo]] contract: the value is the temp-view name plus
+    * the plain-array centers, never the IvfIndex itself). */
   private val ivfCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int),
-        (String, Array[Array[Double]])]]()
+    SessionMemo[(String, Int), (String, Array[Array[Double]])]()
   def ivfIndexFor(spark: SparkSession, dir: String, k: Int): IvfIndex = {
     val (view, centers) =
-      perSession(ivfCache, spark).getOrElseUpdate((dir, k), {
+      ivfCache.getOrBuild(spark, (dir, k)) {
         // Load-or-train through the per-DATASET store (r13): k-means +
         // corpus assignment run in whichever session first serves this
         // (dataset fingerprint, k); every later session — including
         // every future JVM — reads the published parquet and pays zero
         // training jobs. The eager localCheckpoint then pins the LOADED
         // assignment for this session's query stream, exactly as the
-        // freshly-trained copy was pinned before (and a second builder
-        // racing through getOrElseUpdate just loads the winner's copy).
+        // freshly-trained copy was pinned before.
         //
         // A COMMITTED retrain generation (sim31) outranks the base
         // artifact: its marker-gated publish IS the generation pointer
@@ -1341,7 +1282,7 @@ object Similarity {
         val name = s"ivf_idx_${k}_" + dirTag(dir)
         parts("assigned").localCheckpoint(true).createOrReplaceTempView(name)
         (name, collectCenters(parts("centers")))
-      })
+      }
     IvfIndex(spark.table(view), centers)
   }
 
@@ -1570,26 +1511,23 @@ object Similarity {
     * (every 97th vec_id, deterministic cap) and the brute-force
     * truth are IDENTICAL derivations in both queries, so the
     * corpus×queries cosine pass runs once per session instead of once
-    * per grid invocation. Session-scoped only (weak key, eager
-    * checkpoint behind a dir-tagged view — nothing persists across
-    * runs); each audit's own serving scans, windows and recall
-    * aggregates stay fully inside its timed line. */
-  private val knnTruthCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int, Int), String]]()
+    * per grid invocation. Session-scoped only (eager checkpoint behind
+    * a dir-tagged view — nothing persists across runs); each audit's
+    * own serving scans, windows and recall aggregates stay fully
+    * inside its timed line. */
+  private val knnTruthCache = SessionMemo[(String, Int, Int), String]()
   private def knnTruthFor(spark: SparkSession, dir: String,
                           nQueries: Int, topK: Int): DataFrame = {
-    val view = perSession(knnTruthCache, spark)
-      .getOrElseUpdate((dir, nQueries, topK), {
-        val e = Tables.embeddings(spark, dir)
-        val qs = e.filter(col("vec_id") % 97 === 0)
-          .orderBy(col("vec_id")).limit(nQueries)
-        val name = s"knn_truth_${nQueries}_${topK}_" + dirTag(dir)
-        knnJoinDf(spark, e, qs, topK)
-          .select(col("q_id"), col("vec_id"))
-          .localCheckpoint(true).createOrReplaceTempView(name)
-        name
-      })
+    val view = knnTruthCache.getOrBuild(spark, (dir, nQueries, topK)) {
+      val e = Tables.embeddings(spark, dir)
+      val qs = e.filter(col("vec_id") % 97 === 0)
+        .orderBy(col("vec_id")).limit(nQueries)
+      val name = s"knn_truth_${nQueries}_${topK}_" + dirTag(dir)
+      knnJoinDf(spark, e, qs, topK)
+        .select(col("q_id"), col("vec_id"))
+        .localCheckpoint(true).createOrReplaceTempView(name)
+      name
+    }
     spark.table(view)
   }
 
@@ -1804,17 +1742,13 @@ object Similarity {
     * curve all start from the SAME flattened sufficient statistic of
     * the same corpus, so the corpus-sized sketch pass runs once per
     * session and every consumer's tail is driver arithmetic on the one
-    * collected row. Session-scoped only (WeakHashMap on the session —
-    * nothing persists across runs); the value is the plain collected
-    * Seq, which pins no DataFrame and therefore can't leak the weak
-    * session key. Frame-level kernels keep calling [[covSketchFlat]]
+    * collected row. Session-scoped only (nothing persists across
+    * runs). Frame-level kernels keep calling [[covSketchFlat]]
     * directly, so planted-frame specs never share state. */
-  private val covSketchCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int), Seq[Double]]]()
+  private val covSketchCache = SessionMemo[(String, Int), Seq[Double]]()
   private[graft] def covSketchFlatFor(spark: SparkSession, dir: String,
                                       dim: Int): Seq[Double] =
-    perSession(covSketchCache, spark).getOrElseUpdate((dir, dim),
+    covSketchCache.getOrBuild(spark, (dir, dim))(
       covSketchFlat(Tables.embeddings(spark, dir).select(col("embedding")),
         dim))
 
@@ -2452,14 +2386,10 @@ object Similarity {
   /** Memoized per-(session, dir) PQ index — the same serving contract
     * as [[ivfIndexFor]]: codebooks + corpus-wide encode run ONCE and
     * checkpoint; queries are table-lookup scans over the code frame. */
-  // (view name, codebooks) for the same reason as ivfCache: a PqIndex
-  // value would pin the weak session key through its codes DataFrame.
   private val pqCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        (String, Array[Array[Array[Double]]])]]()
+    SessionMemo[String, (String, Array[Array[Array[Double]]])]()
   def pqIndexFor(spark: SparkSession, dir: String): PqIndex = {
-    val (view, books) = perSession(pqCache, spark).getOrElseUpdate(dir, {
+    val (view, books) = pqCache.getOrBuild(spark, dir) {
       // load-or-train through the per-dataset store (ivfIndexFor note)
       val parts = IndexStore.loadOrBuild(spark, dir, "embeddings", "pq") {
         val idx = pqIndex(Tables.embeddings(spark, dir))
@@ -2469,7 +2399,7 @@ object Similarity {
       val name = "pq_idx_" + dirTag(dir)
       parts("codes").localCheckpoint(true).createOrReplaceTempView(name)
       (name, collectBooks(parts("books")))
-    })
+    }
     PqIndex(spark.table(view), books)
   }
 
@@ -2697,16 +2627,13 @@ object Similarity {
   /** Memoized per-(session, dir) IVF-PQ index — the ivfIndexFor /
     * pqIndexFor serving contract: coarse training, residual codebooks
     * and the corpus encode run ONCE and checkpoint behind a temp view;
-    * queries are probe-planning plus a pruned code scan. (View name +
-    * plain arrays cached, never the index value — a DataFrame-holding
-    * value would pin the weak session key.) */
+    * queries are probe-planning plus a pruned code scan. */
   private val ivfPqCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        (String, Array[Array[Double]], Array[Array[Array[Double]]])]]()
+    SessionMemo[String,
+      (String, Array[Array[Double]], Array[Array[Array[Double]]])]()
   def ivfPqIndexFor(spark: SparkSession, dir: String): IvfPqIndex = {
     val (view, centers, books) =
-      perSession(ivfPqCache, spark).getOrElseUpdate(dir, {
+      ivfPqCache.getOrBuild(spark, dir) {
         // load-or-train through the per-dataset store (ivfIndexFor note)
         val parts = IndexStore.loadOrBuild(spark, dir, "embeddings",
           "ivfpq") {
@@ -2719,7 +2646,7 @@ object Similarity {
         parts("codes").localCheckpoint(true).createOrReplaceTempView(name)
         (name, collectCenters(parts("centers")),
           collectBooks(parts("books")))
-      })
+      }
     IvfPqIndex(spark.table(view), centers, books)
   }
 
@@ -3014,11 +2941,9 @@ object Similarity {
     * for bucketed layout — 1.2 s of the 1.23 s bench line was encode,
     * not search). Encode ONCE, checkpoint behind a temp view, serve the
     * codegen scan + rerank. */
-  private val int8Cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val int8Cache = SessionMemo[String, String]()
   private[graft] def int8CodesFor(spark: SparkSession, dir: String): DataFrame = {
-    val view = perSession(int8Cache, spark).getOrElseUpdate(dir, {
+    val view = int8Cache.getOrBuild(spark, dir) {
       // load-or-encode through the per-dataset store (ivfIndexFor note)
       val parts = IndexStore.loadOrBuild(spark, dir, "embeddings", "int8") {
         Seq("codes" -> int8Codes(Tables.embeddings(spark, dir)))
@@ -3026,7 +2951,7 @@ object Similarity {
       val name = "int8_codes_" + dirTag(dir)
       parts("codes").localCheckpoint(true).createOrReplaceTempView(name)
       name
-    })
+    }
     spark.table(view)
   }
 

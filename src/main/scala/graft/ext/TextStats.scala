@@ -257,14 +257,11 @@ object TextStats {
     * NB-model / IVF-index precedent) — without the memo t18 re-ran t3's
     * full corpus pass inside its own plan every invocation. The cached
     * value is plain tuples (≤ label-space² rows — bounded by the class
-    * vocabulary, never the corpus), so unlike caching a DataFrame the
-    * entry pins no Spark plan state. */
-  private val t3Cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Array[(String, String, Long)]]]()
+    * vocabulary, never the corpus). */
+  private val t3Cache = SessionMemo[String, Array[(String, String, Long)]]()
 
   private def t3MatrixRows(spark: SparkSession, dir: String): Array[(String, String, Long)] =
-    Similarity.perSession(t3Cache, spark).getOrElseUpdate(dir, {
+    t3Cache.getOrBuild(spark, dir) {
       val t = concat(lit(" "), lower(col("text")), lit(" "))
       val predicted =
         when(t.contains(" the ") || t.contains(" and "), "en")
@@ -278,7 +275,7 @@ object TextStats {
         .agg(count(lit(1)).as("n"))
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    })
+    }
 
   /** T3 — heuristic language ID by stopword evidence (an n-gram/stopword
     * classifier expressible as pure relational ops), cross-tabbed against
@@ -853,28 +850,16 @@ object TextStats {
       .orderBy(col("lang"))
 
   /** Per-(session, dir) memo of the trained unigram table — pass 1 runs
-    * once per served dir, not once per invocation (Bench/ScalingProbe
-    * re-invoke the registered builder freely; same immutable-dir
-    * contract as [[Similarity.corpusSize]]). NOTE the builder is still
+    * once per served dir, not once per invocation (Bench re-invokes
+    * the registered builder freely). NOTE the builder is still
     * EAGER on first call per dir — the broadcast literal needs the
     * frequencies before the plan exists — so a plan audit of t9 shows
     * pass 2 only. */
-  private val vocabCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int), Map[String, Double]]]()
+  private val vocabCache = SessionMemo[(String, Int), Map[String, Double]]()
 
   private def unigramLogp(spark: SparkSession, dir: String,
                           maxVocab: Int): Map[String, Double] = {
-    val perDir = vocabCache.synchronized {
-      var m = vocabCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[(String, Int), Map[String, Double]]
-        vocabCache.put(spark, m)
-      }
-      m
-    }
-    perDir.getOrElseUpdate((dir, maxVocab), {
+    vocabCache.getOrBuild(spark, (dir, maxVocab)) {
       // limit BEFORE collect: the guard below must fire as a diagnostic,
       // not arrive after an unbounded vocabulary has already filled the
       // driver heap (when the vocab fits, limit returns every row)
@@ -889,7 +874,7 @@ object TextStats {
           "(score OOV with a floor probability) before broadcasting it")
       val total = freqs.map(_._2).sum.toDouble
       freqs.map { case (t, c) => t -> math.log10(c / total) }.toMap
-    })
+    }
   }
 
   /** T9 — unigram log-probability quality scoring: the CCNet-style
@@ -938,16 +923,13 @@ object TextStats {
     * is an ingest-time artifact, re-invocations serve the learned
     * table. Rows-only: no SQL engine replays BPE training; the loop is
     * pinned by the classic hand-computed example in BpeTokenizerSpec. */
-  private val mergeCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int), Seq[(String, String)]]]()
+  private val mergeCache = SessionMemo[(String, Int), Seq[(String, String)]]()
   def t10BpeTrain(spark: SparkSession, dir: String,
                   nMerges: Int = 20): DataFrame = {
     import spark.implicits._
-    val merges = Similarity.perSession(mergeCache, spark)
-      .getOrElseUpdate((dir, nMerges),
-        graft.functions.BpeTokenizer.trainMerges(
-          Tables.documents(spark, dir), nMerges))
+    val merges = mergeCache.getOrBuild(spark, (dir, nMerges))(
+      graft.functions.BpeTokenizer.trainMerges(
+        Tables.documents(spark, dir), nMerges))
     merges.zipWithIndex
       .map { case ((l, r), i) => (i, l, r) }
       .toDF("rank", "left", "right")
@@ -979,14 +961,11 @@ object TextStats {
     * OOV path to diverge on); smoothing still shapes the scores.
     * The fold is sequential per doc, score rounds(4) at the report. */
   private val bigramCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[
-        (String, Int, Int), (Map[String, Long], Map[String, Long])]]()
+    SessionMemo[(String, Int, Int), (Map[String, Long], Map[String, Long])]()
 
   private def bigramCounts(spark: SparkSession, dir: String,
       maxVocab: Int, maxBigrams: Int): (Map[String, Long], Map[String, Long]) =
-    Similarity.perSession(bigramCache, spark)
-      .getOrElseUpdate((dir, maxVocab, maxBigrams), {
+    bigramCache.getOrBuild(spark, (dir, maxVocab, maxBigrams)) {
       val toks = Tables.documents(spark, dir)
         .select(filter(split(lower(col("text")), " "), w => w =!= "")
           .as("toks"))
@@ -1012,7 +991,7 @@ object TextStats {
           "d20 hashed-bucket model: fixed-width tables at any " +
           "vocabulary) instead of the exact model")
       (uni.toMap, bi.toMap)
-    })
+    }
 
   /** The per-doc mean bigram log-probability — ONE definition shared
     * by t22's per-language report and t23's quality gate, so a
@@ -1098,9 +1077,7 @@ object TextStats {
     * the scorer indexes them directly. Memoized per (session, dir,
     * buckets) like every trained artifact here. */
   private val hashedLmCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[
-        (String, Int, Int), (Array[Long], Array[Long])]]()
+    SessionMemo[(String, Int, Int), (Array[Long], Array[Long])]()
 
   /** The frame-level kernel — shared by the memoized per-dir tables
     * below and the t24′ live fold ([[graft.streaming.HashedLmFold]]),
@@ -1135,10 +1112,8 @@ object TextStats {
 
   private[graft] def hashedLmCounts(spark: SparkSession, dir: String,
       uniBuckets: Int, biBuckets: Int): (Array[Long], Array[Long]) =
-    Similarity.perSession(hashedLmCache, spark)
-      .getOrElseUpdate((dir, uniBuckets, biBuckets),
-        hashedLmCountsOf(Tables.documents(spark, dir),
-          uniBuckets, biBuckets))
+    hashedLmCache.getOrBuild(spark, (dir, uniBuckets, biBuckets))(
+      hashedLmCountsOf(Tables.documents(spark, dir), uniBuckets, biBuckets))
 
   /** The t24 report tail over ANY docs frame and count tables — the
     * serve half shared with [[graft.streaming.HashedLmFold]]. `key`
@@ -1194,16 +1169,6 @@ object TextStats {
   }
   private def t24Registered(spark: SparkSession, dir: String): DataFrame =
     t24HashedLm(spark, dir)
-
-
-  /** Drop this session's learned vocab/merge tables (see
-    * [[Similarity.invalidateCaches]], which fans out here). */
-  private[ext] def invalidateCaches(spark: SparkSession): Unit = {
-    vocabCache.synchronized(vocabCache.remove(spark))
-    mergeCache.synchronized(mergeCache.remove(spark))
-    bigramCache.synchronized(bigramCache.remove(spark))
-    hashedLmCache.synchronized(hashedLmCache.remove(spark))
-  }
 
   /** T13 — per-document character statistics (the Gopher/C4 rule family
     * below the word level): Shannon entropy of the character

@@ -162,28 +162,20 @@ object WindowFns {
     * overlap graph) stays fully in its timed line. Eager
     * localCheckpoint pins the frame; the temp-view name carries the
     * dir hash so distinct dirs cannot collide. */
-  private val spanCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val spanCache = SessionMemo[String, String]()
   def sessionSpans(spark: SparkSession, dir: String): DataFrame = {
-    val view = Similarity.perSession(spanCache, spark)
-      .getOrElseUpdate(dir, {
-        val name = "session_spans_" + Similarity.dirTag(dir)
-        sessionAssign(Tables.events(spark, dir), gapSeconds = 1800L,
-          orderCol = "event_id")
-          .groupBy(col("user_id"), col("session_seq"))
-          .agg(min(col("epoch_s")).as("start_s"),
-            max(col("epoch_s")).as("end_s"))
-          .localCheckpoint(true).createOrReplaceTempView(name)
-        name
-      })
+    val view = spanCache.getOrBuild(spark, dir) {
+      val name = "session_spans_" + Similarity.dirTag(dir)
+      sessionAssign(Tables.events(spark, dir), gapSeconds = 1800L,
+        orderCol = "event_id")
+        .groupBy(col("user_id"), col("session_seq"))
+        .agg(min(col("epoch_s")).as("start_s"),
+          max(col("epoch_s")).as("end_s"))
+        .localCheckpoint(true).createOrReplaceTempView(name)
+      name
+    }
     spark.table(view)
   }
-
-  /** Drop this session's memoized span frame (serviced by
-    * [[Similarity.invalidateCaches]], which fans out here). */
-  private[ext] def invalidateCaches(spark: SparkSession): Unit =
-    spanCache.synchronized(spanCache.remove(spark))
 
   /** The DuckDB replay of [[sessionSpans]] (CTEs g → s → spans),
     * interpolated into every oracle that consumes spans. */

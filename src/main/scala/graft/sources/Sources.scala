@@ -476,23 +476,14 @@ object Sources {
       // byte-for-byte the sequential one (job descriptions and Spark's
       // FIFO scheduler handle concurrent driver submissions natively);
       // the audit below starts only after all three complete.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val legs: Seq[() => Unit] = Seq(
-          () => ev.repartitionByRange(nFiles, c("ts"))
-            .write.mode("overwrite").parquet(s"$tmp/by_ts"),
-          () => ev.repartitionByRange(nFiles, c("user_id"))
-            .write.mode("overwrite").parquet(s"$tmp/by_user"),
-          () => zorderWrite(
-            withZKey(ev, expr("unix_seconds(ts)"), c("user_id")),
-            s"$tmp/zorder", nFiles))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            legs.map(l => scala.concurrent.Future(l()))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+      graft.Parallel.parallelLegs(3)(Seq[() => Unit](
+        () => ev.repartitionByRange(nFiles, c("ts"))
+          .write.mode("overwrite").parquet(s"$tmp/by_ts"),
+        () => ev.repartitionByRange(nFiles, c("user_id"))
+          .write.mode("overwrite").parquet(s"$tmp/by_user"),
+        () => zorderWrite(
+          withZKey(ev, expr("unix_seconds(ts)"), c("user_id")),
+          s"$tmp/zorder", nFiles)))
       val layouts = Seq("by_ts", "by_user", "zorder")
       val stats = footerRanges(spark,
         layouts.map(l => l -> s"$tmp/$l"), Seq("ts", "user_id"))
