@@ -1,7 +1,12 @@
 package graft
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+
+import graft.ext.SessionMemo
 
 /** Table loaders + declared schemas for the driver testdata
   * (/root/repo/TESTDATA.md) and for the air-quality observation record
@@ -11,11 +16,55 @@ import org.apache.spark.sql.types._
 object Tables {
 
   /** Read one testdata table. Parquet is self-describing (reference
-    * dashboard.py:47 does the same); Catalyst prunes columns and pushes
-    * filters into this scan automatically.
+    * dashboard.py:47 re-reads it the same way on every refresh);
+    * Catalyst prunes columns and pushes filters into this scan
+    * automatically.
+    *
+    * Inferring the schema is itself a Spark job (footer reads through
+    * `mergeSchemasInParallel`, even for one file), run before the query
+    * is planned. So the inferred schema is memoized per (session, path)
+    * beside a fingerprint of the files it came from — (path, length,
+    * mtime) of every file and directory under the path — and later
+    * reads pass it to the reader, which then plans without a job. The
+    * fingerprint is checked on every read: a table rewritten in place
+    * is re-inferred on its next read, replacing its one entry, with no
+    * [[ext.Similarity.invalidateCaches]] needed. A path that cannot be
+    * listed (a missing one) is read as before and stores nothing, so
+    * it fails exactly as before.
     */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(fp) =>
+        val (_, schema) = schemaMemo.getOrRebuild(spark, path)(_._1 == fp)(
+          fp -> spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** `path → (fingerprint, inferred schema)`, plain driver data only. */
+  private[graft] val schemaMemo =
+    SessionMemo[String, (Seq[(String, Long, Long)], StructType)]()
+
+  /** (path, length, mtime) of `path` and, for a directory, of everything
+    * under it, through `listStatus` on the session's own Hadoop
+    * configuration (a fresh `Configuration`, or `listFiles`' located
+    * statuses, cost milliseconds per call); None when it cannot be
+    * listed. */
+  private def fingerprint(spark: SparkSession, path: String)
+      : Option[Seq[(String, Long, Long)]] =
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(s: FileStatus): Seq[(String, Long, Long)] =
+        (s.getPath.toString, s.getLen, s.getModificationTime) +:
+          (if (s.isDirectory)
+             fs.listStatus(s.getPath).toSeq.sortBy(_.getPath.toString)
+               .flatMap(walk)
+           else Nil)
+      Some(walk(fs.getFileStatus(root)))
+    } catch { case _: IOException => None }
 
   /** The events table's `ts` column has shipped in two physical encodings
     * across testdata generations: parquet TIMESTAMP(NANOS) — which Spark's

@@ -214,15 +214,20 @@ object Projections {
     * 100 TB — the audit's cost is O(columns), never O(data). Events are
     * audited AS SERVED (through [[Tables.events]]'s normalization), so
     * the contract pins engine semantics, not which parquet logical type
-    * this generation happened to write. */
-  def p11SchemaAudit(spark: SparkSession, dir: String): DataFrame =
-    schemaAudit(spark,
-      Tables.tableContract.map(_._1).distinct.sorted.map { t =>
-        t -> (try {
-          Some((if (t == "events") Tables.events(spark, dir)
-                else Tables.t(spark, dir, t)).schema)
-        } catch { case _: Exception => None })
-      }.toMap)
+    * this generation happened to write. The ten schema reads are
+    * independent, so they overlap on a small driver pool; on a fresh
+    * session each is an inference job, whose result [[Tables.t]]
+    * memoizes for the session's later scans. */
+  def p11SchemaAudit(spark: SparkSession, dir: String): DataFrame = {
+    val tables = Tables.tableContract.map(_._1).distinct.sorted
+    val schemas = graft.Parallel.parallelLegs(4)(tables.map { t => () =>
+      try {
+        Some((if (t == "events") Tables.events(spark, dir)
+              else Tables.t(spark, dir, t)).schema)
+      } catch { case _: Exception => None }
+    })
+    schemaAudit(spark, tables.zip(schemas).toMap)
+  }
 
   /** The audit kernel over caller-supplied observed schemas (None = the
     * table failed to load at all) — injectable so the spec plants

@@ -13,7 +13,10 @@ import scala.collection.concurrent.TrieMap
   *    ingest/serve split every index deployment assumes). After
   *    rewriting a dir in place, call [[Similarity.invalidateCaches]]:
   *    declaring a memo registers it, so that one entry point drops
-  *    every memo by construction.
+  *    every memo by construction. A memo read through
+  *    [[getOrRebuild]] is validated by a fingerprint of its source
+  *    instead ([[graft.Tables.t]]'s parquet schemas), so an in-place
+  *    rewrite needs no invalidation there.
   *  - Sessions are WEAK keys: a stopped, dereferenced session's
   *    entries (and the checkpoint blocks behind them) become
   *    collectable instead of living for the JVM lifetime.
@@ -48,10 +51,20 @@ final class SessionMemo[K, V] private () {
   private def existing(spark: SparkSession): Option[TrieMap[K, Slot[V]]] =
     sessions.synchronized(Option(sessions.get(spark)))
 
-  def getOrBuild(spark: SparkSession, key: K)(build: => V): V = {
+  def getOrBuild(spark: SparkSession, key: K)(build: => V): V =
+    getOrRebuild(spark, key)(_ => true)(build)
+
+  /** [[getOrBuild]] for a memo validated on every read: a stored value
+    * that fails `valid` is dropped and rebuilt in place, so a key keeps
+    * one entry however often its source changes. */
+  def getOrRebuild(spark: SparkSession, key: K)(valid: V => Boolean)
+      (build: => V): V = {
     val slot = slotsOf(spark).getOrElseUpdate(key, new Slot[V])
     slot.synchronized {
-      if (slot.value.isEmpty) slot.value = Some(build)
+      if (!slot.value.exists(valid)) {
+        slot.value = None
+        slot.value = Some(build)
+      }
       slot.value.get
     }
   }

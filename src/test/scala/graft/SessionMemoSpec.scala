@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -20,45 +20,23 @@ class SessionMemoSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  private def copyDir(src: Path, dst: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(src).iterator().asScala.foreach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  private def rmDir(p: Path): Unit = if (Files.exists(p)) {
-    import scala.jdk.CollectionConverters._
-    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-  }
-
-  /** Replace `<dir>/<table>.parquet` with `edit` of its current rows. */
-  private def rewrite(dir: Path, table: String)(edit: DataFrame => DataFrame)
-      : Unit = {
-    val cur = dir.resolve(s"$table.parquet")
-    val next = dir.resolve(s"$table.parquet.next")
-    edit(spark.read.parquet(cur.toString)).write.parquet(next.toString)
-    rmDir(cur)
-    Files.move(next, cur)
-  }
-
   test("invalidateCaches makes j11, sim21 and t18 serve a rewritten dir " +
       "exactly as a fresh session does") {
     val dir = Files.createTempDirectory("graft_memo_invalidate")
     try {
-      copyDir(Paths.get("/root/testdata/sf0.001"), dir)
+      TestDirs.copyDir(Paths.get(TestDirs.sf0001), dir)
       val queries = Seq("j11_bucketed_join", "sim21_int8_ann",
         "t18_classifier_metrics")
       def serve(s: SparkSession, q: String) =
         rows(SparkEntry.queries(q)(s, dir.toString))
       val before = queries.map(q => q -> serve(spark, q)).toMap
-      rewrite(dir, "orders")(_.filter(col("o_orderkey") % 2 === 0))
-      rewrite(dir, "embeddings")(_.withColumn("embedding",
+      TestDirs.rewrite(spark, dir, "orders")(
+        _.filter(col("o_orderkey") % 2 === 0))
+      TestDirs.rewrite(spark, dir, "embeddings")(_.withColumn("embedding",
         when(col("vec_id") === 0, col("embedding"))
           .otherwise(transform(col("embedding"), x => -x))))
-      rewrite(dir, "documents")(_.filter(col("doc_id") % 2 === 0))
+      TestDirs.rewrite(spark, dir, "documents")(
+        _.filter(col("doc_id") % 2 === 0))
       Similarity.invalidateCaches(spark)
       val stale = queries.filter { q =>
         val after = serve(spark, q)
@@ -69,7 +47,7 @@ class SessionMemoSpec extends AnyFunSuite {
       assert(stale.isEmpty, s"stale rows after invalidation: $stale")
     } finally {
       Similarity.invalidateCaches(spark)
-      rmDir(dir)
+      TestDirs.rmDir(dir)
     }
   }
 
