@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A27's streaming twin — the live A/B experiment readout. Per-user
   * converted-ever is an OR (max) monoid, so the fold's state IS the
@@ -22,10 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * guard for uniformity (a replay is a content no-op either way).
   * Restart = [[rebuildFrom]] over the landed corpus.
   */
-class AbTestStreamFold extends Serializable {
+class AbTestStreamFold extends StreamFold {
 
   private var users: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (user_id, event_type, ...). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -40,15 +38,6 @@ class AbTestStreamFold extends Serializable {
     synchronized { users = Some(ck) }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a27-shaped experiment card over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = synchronized(users) match {
     case Some(u) => graft.etl.Analyze.abTestFromUsers(u)
@@ -58,24 +47,5 @@ class AbTestStreamFold extends Serializable {
         Seq.empty[(Long, Long)].toDF("user_id", "converted"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { users = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(users.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = users = None
 }

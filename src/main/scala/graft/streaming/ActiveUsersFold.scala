@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A22's streaming twin — the fold tier's fifth leg, ACTIVE-USER
   * windows: per micro-batch the (day, user) pairs dedup DISTRIBUTED and
@@ -20,7 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * folds to the same frame size as a trickle with the same population.
   * Set semantics make the fold IDEMPOTENT (union+distinct of a replayed
   * micro-batch is a content no-op), so unlike the additive
-  * [[QuantileStreamFold]] no batchId replay guard is needed.
+  * [[QuantileStreamFold]] it does not rely on the batchId replay guard.
   *
   * Restart follows the sibling folds' contract: the pair frame is
   * outside the streaming checkpoint; recovery is one distributed
@@ -29,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * every (day, user) at least once. Pinned stream ≡ batch (and
   * rebuild ≡ continuous) in StreamingSpec.
   */
-class ActiveUsersStreamFold extends Serializable {
+class ActiveUsersStreamFold extends StreamFold {
 
   private var pairs: Option[DataFrame] = None
 
@@ -57,25 +56,5 @@ class ActiveUsersStreamFold extends Serializable {
   /** The accumulated (d, user_id) state frame — exposed for specs. */
   def stateFrame: Option[DataFrame] = synchronized(pairs)
 
-  /** Rebuild from the landed corpus (the restart recipe): one
-    * distributed dedup, no driver-side row traffic. */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { pairs = None }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(pairs.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF())
-      }
-      .start()
-  }
+  protected def reset(): Unit = pairs = None
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A30's streaming twin — live last-touch attribution. The batch op's
   * one corpus window ("most recent preceding non-purchase touch per
@@ -28,12 +27,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * restart = [[rebuildFrom]] (no carry ⇒ interior credits are ALL
   * credits).
   */
-class AttributionStreamFold extends Serializable {
+class AttributionStreamFold extends StreamFold {
 
   private val census =
     scala.collection.mutable.Map.empty[String, (Long, Long)]
   private var lastTouch: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events
     * (event_id, ts, user_id, event_type, value). */
@@ -67,15 +65,6 @@ class AttributionStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a30-shaped report over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -85,24 +74,5 @@ class AttributionStreamFold extends Serializable {
     graft.etl.Analyze.attributionReport(rows)
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { census.clear(); lastTouch = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(lastTouch.isDefined || census.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { census.clear(); lastTouch = None }
 }

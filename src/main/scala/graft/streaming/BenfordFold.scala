@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A41's streaming twin — the live Benford audit. State is the batch
   * op's own reduction ([[graft.etl.Analyze.benfordDigitCounts]]): at
@@ -17,11 +16,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * correctness: a re-delivered batch would double its digits' counts
   * and silently bend the chi-square. Restart = [[rebuildFrom]] over
   * the landed corpus (one batch-kernel pass). */
-class BenfordFold extends Serializable {
+class BenfordFold extends StreamFold {
 
   private var counts: Map[Int, Long] = Map.empty
-  private var lastBatchId = -1L
-  private var folded = false
 
   /** Fold one micro-batch of raw events (event_type, value). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -31,16 +28,6 @@ class BenfordFold extends Serializable {
       counts = partial.foldLeft(counts) { case (m, (d, n)) =>
         m.updated(d, m.getOrElse(d, 0L) + n)
       }
-      folded = true
-    }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
     }
   }
 
@@ -51,22 +38,5 @@ class BenfordFold extends Serializable {
       synchronized(counts).toSeq.toDF("digit", "n"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { counts = Map.empty; lastBatchId = -1L; folded = false }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(folded),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = counts = Map.empty
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A43's streaming twin — the live bootstrap-CI. State is the batch
   * op's own reductions ([[graft.etl.Analyze.bootstrapReplicaSums]] +
@@ -20,13 +19,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * SUM is not idempotent, so the [[onBatch]] batchId guard is
   * correctness: a re-delivered batch would double its rows' weights
   * in every replica and silently narrow the interval. Restart =
-  * [[rebuildFrom]] over the landed corpus (one batch-kernel pass). */
-class BootstrapFold extends Serializable {
+  * [[rebuildFrom]] over the landed corpus (one batch-kernel pass); a
+  * `landed` that breaks [[StreamFold]]'s marker-committed contract
+  * would not error either, it would silently narrow the served CI. */
+class BootstrapFold extends StreamFold {
 
   private var reps: Map[(String, Int), (Long, Long)] = Map.empty
   private var raw: Map[String, (Long, Long)] = Map.empty
-  private var lastBatchId = -1L
-  private var folded = false
 
   /** Fold one micro-batch of raw events (event_type, event_id, value). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -42,16 +41,6 @@ class BootstrapFold extends Serializable {
       raw = pw.foldLeft(raw) { case (m, (k, (n, sc))) =>
         val (a, b) = m.getOrElse(k, (0L, 0L)); m.updated(k, (a + n, b + sc))
       }
-      folded = true
-    }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
     }
   }
 
@@ -66,30 +55,5 @@ class BootstrapFold extends Serializable {
         .toDF("event_type", "n_events", "sc"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). `landed`
-    * must hold MARKER-COMMITTED batches only ([[FoldRestart.guard]]'s
-    * contract, advisor r16): the reset batch-id guard means the
-    * checkpoint's re-delivered final batch folds AGAIN after this —
-    * correct iff those rows are not already in `landed`. The replica
-    * sums are exact-integer SUMs, so a violation would not error; it
-    * would silently narrow the served CI. */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized {
-      reps = Map.empty; raw = Map.empty; lastBatchId = -1L; folded = false
-    }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(folded),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { reps = Map.empty; raw = Map.empty }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SIM28's streaming twin — the LIVE retrain alarm. The batch card
   * compares two finished corpus generations; production wants the
@@ -24,14 +23,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * vectors). SUM is not idempotent, so the [[onBatch]] batchId guard
   * is correctness: a re-delivered batch would double its cells'
   * counts and bend the PSI. Restart = [[rebuildFrom]] over the landed
-  * (marker-committed — [[FoldRestart.guard]]'s contract) assigned
-  * corpus. */
+  * (marker-committed — [[StreamFold]]'s contract) assigned corpus. */
 class CellDriftFold(refCounts: Map[Int, Long], k: Int)
-    extends Serializable {
+    extends StreamFold {
 
   private var counts: Map[Int, Long] = Map.empty
-  private var lastBatchId = -1L
-  private var folded = false
   private var badCells = 0L
 
   /** Rows whose `cell` violated the published [0, k) domain (or was
@@ -60,16 +56,6 @@ class CellDriftFold(refCounts: Map[Int, Long], k: Int)
         if (c < 0) badCells += n
         else counts = counts.updated(c, counts.getOrElse(c, 0L) + n)
       }
-      folded = true
-    }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
     }
   }
 
@@ -82,26 +68,5 @@ class CellDriftFold(refCounts: Map[Int, Long], k: Int)
       synchronized(counts).toSeq.toDF("cell", "cc"), k)
   }
 
-  /** Rebuild from the landed assigned corpus (the restart recipe;
-    * `landed` must hold marker-committed batches only — see
-    * [[FoldRestart.guard]]). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized {
-      counts = Map.empty; lastBatchId = -1L; folded = false; badCells = 0L
-    }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming assigned-vector frame into the fold. */
-  def start(assigned: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(folded),
-      landed.map(l => () => rebuildFrom(l)))
-    assigned.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { counts = Map.empty; badCells = 0L }
 }

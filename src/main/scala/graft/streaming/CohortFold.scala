@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** W9's streaming twin — the live cohort-retention triangle, and the
   * fold family's only member with NO ordering contract at all: the
@@ -19,10 +18,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * distributed frame (the TransitionFold discipline), deduplicated and
   * checkpointed per fold; restart = [[rebuildFrom]].
   */
-class CohortStreamFold extends Serializable {
+class CohortStreamFold extends StreamFold {
 
   private var pairs: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, user_id, ...). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -35,15 +33,6 @@ class CohortStreamFold extends Serializable {
     synchronized { pairs = Some(ck) }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The w9-shaped retention triangle over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = synchronized(pairs) match {
     case Some(p) => graft.ext.WindowFns.cohortFromWeeks(p)
@@ -53,24 +42,5 @@ class CohortStreamFold extends Serializable {
         Seq.empty[(Long, Long)].toDF("user_id", "week"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { pairs = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(pairs.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = pairs = None
 }

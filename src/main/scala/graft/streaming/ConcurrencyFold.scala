@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** W12's streaming twin — the concurrency curve maintained LIVE over a
   * stream of session spans (start_s, end_s). The batch sweep-line's
@@ -25,15 +24,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Addition double-counts on replay, so like [[QuantileStreamFold]]
   * (and unlike the set-semantics [[ActiveUsersStreamFold]]) the
-  * foreachBatch body carries the batchId and drops re-deliveries.
+  * replay guard ([[onBatch]]) is correctness, not uniformity.
   * Restart: the delta frame is outside the streaming checkpoint;
   * recovery is one distributed re-reduction of the landed spans
   * ([[rebuildFrom]]) — exact by associativity.
   */
-class ConcurrencyStreamFold extends Serializable {
+class ConcurrencyStreamFold extends StreamFold {
 
   private var deltas: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of spans: reduce distributed, merge by sum. */
   def foldBatch(spans: DataFrame): Unit = {
@@ -48,16 +46,6 @@ class ConcurrencyStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded (a
-    * retry re-delivers the same id; additive nets must not double). */
-  def onBatch(spans: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(spans)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The per-hour concurrency curve over everything the stream has
     * carried — the w12 serve, through the SAME synthesis kernel. */
   def serve(): DataFrame = synchronized {
@@ -66,25 +54,5 @@ class ConcurrencyStreamFold extends Serializable {
     graft.ext.WindowFns.curveFromDeltas(d)
   }
 
-  /** Rebuild from the landed span corpus (the restart recipe): one
-    * distributed re-reduction, no driver-side row traffic. */
-  def rebuildFrom(landedSpans: DataFrame): Unit = {
-    synchronized { deltas = None; lastBatchId = -1L }
-    foldBatch(landedSpans)
-  }
-
-  /** Wire a streaming span frame into the fold. */
-  def start(spans: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(deltas.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    spans.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = deltas = None
 }

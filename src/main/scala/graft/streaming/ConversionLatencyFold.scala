@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** W17's streaming twin — the live conversion-latency card, closing the
   * funnel family (w8/w8'/w17). Unlike the in-order `funnelStream`
@@ -27,12 +26,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Everything else is provably dead and drops at each fold, so state
   * is per-user (1 view + eligible-frontier clicks/purchases), not the
   * event history. Set-union state makes the fold IDEMPOTENT — a
-  * replayed micro-batch distincts away to a content no-op — so no
-  * batchId replay guard is needed; restart is [[rebuildFrom]] over the
-  * landed corpus (one distributed pass). Eager `localCheckpoint` per
-  * fold truncates the accumulated-union lineage (the SurvivalFold
-  * discipline). */
-class ConversionLatencyFold extends Serializable {
+  * replayed micro-batch distincts away to a content no-op — so the
+  * batchId replay guard is belt-and-braces; restart is
+  * [[rebuildFrom]] over the landed corpus (one distributed pass).
+  * Eager `localCheckpoint` per fold truncates the accumulated-union
+  * lineage (the SurvivalFold discipline). */
+class ConversionLatencyFold extends StreamFold {
 
   /** Compacted (user_id, event_type, ts) state — a DataFrame, never a
     * driver structure. */
@@ -75,24 +74,5 @@ class ConversionLatencyFold extends Serializable {
   /** The compacted state frame — exposed for specs (size bounds). */
   def stateFrame: Option[DataFrame] = synchronized(ev)
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { ev = None }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(ev.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF())
-      }
-      .start()
-  }
+  protected def reset(): Unit = ev = None
 }

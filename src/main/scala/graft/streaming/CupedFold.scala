@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A35's streaming twin — the live CUPED experiment dashboard. The
   * batch op derives its pre/post boundary from the corpus day span; a
@@ -24,10 +23,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * not idempotent, so the [[onBatch]] batchId guard is correctness: a
   * re-delivered batch would double both X and Y. Restart =
   * [[rebuildFrom]] over the landed corpus. */
-class CupedFold(splitDay: Long) extends Serializable {
+class CupedFold(splitDay: Long) extends StreamFold {
 
   private var users: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, user_id, event_type,
     * value). */
@@ -43,16 +41,6 @@ class CupedFold(splitDay: Long) extends Serializable {
     }
     val ck = merged.localCheckpoint(true)
     synchronized { users = Some(ck) }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded —
-    * the guard is CORRECTNESS (sum double-counts on replay). */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
   }
 
   /** The a35-shaped CUPED card over everything folded so far. */
@@ -77,22 +65,5 @@ class CupedFold(splitDay: Long) extends Serializable {
         .toDF("user_id", "pre_cents", "post_cents"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { users = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(users.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = users = None
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A24's streaming twin — live CUSUM drift monitoring against a FIXED
   * reference baseline (the process-control deployment: μ/σ come from a
@@ -29,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (it IS the batch kernel).
   */
 class CusumStreamFold(ref: Map[String, (Double, Double)])
-    extends Serializable {
+    extends StreamFold {
 
   /** Per-type carry: (sHi, sLo, maxHi, maxLo, nHiAlarms, nLoAlarms,
     * firstHiId, firstLoId, n). */
@@ -93,24 +92,5 @@ class CusumStreamFold(ref: Map[String, (Double, Double)])
       "first_lo_alarm_id")
   }
 
-  /** Restart recovery: clear and refold the landed corpus in one pass
-    * (exactly the batch kernel's arithmetic — the fold with carry 0). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized(state.clear())
-    foldBatch(landed)
-  }
-
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(state.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF())
-      }
-      .start()
-  }
+  protected def reset(): Unit = state.clear()
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** W16's streaming twin — the live day-over-day hourly comparison.
   * Identical state shape to [[EwmaStreamFold]] (w16 and w15 share the
@@ -16,10 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * carries the batchId and drops foreachBatch retries; restart =
   * [[rebuildFrom]], exact by additivity.
   */
-class DayOverDayStreamFold extends Serializable {
+class DayOverDayStreamFold extends StreamFold {
 
   private val state = scala.collection.mutable.Map.empty[(String, Long), Long]
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, event_type, value, ...). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -32,15 +30,6 @@ class DayOverDayStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The w16-shaped report over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -50,24 +39,5 @@ class DayOverDayStreamFold extends Serializable {
     graft.ext.WindowFns.dayOverDayFromHourly(hourly)
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { state.clear(); lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(state.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = state.clear()
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** W15's streaming twin — the live EWMA volume baseline. The batch
   * op's whole design is already the streaming state shape: w15 reduces
@@ -28,10 +27,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * exactly-once device); restart = [[rebuildFrom]] over the landed
   * corpus, exact by additivity.
   */
-class EwmaStreamFold extends Serializable {
+class EwmaStreamFold extends StreamFold {
 
   private val state = scala.collection.mutable.Map.empty[(String, Long), Long]
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, event_type, value, ...). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -41,15 +39,6 @@ class EwmaStreamFold extends Serializable {
         val k = (r.getString(0), r.getLong(1))
         state(k) = state.getOrElse(k, 0L) + r.getLong(2)
       }
-    }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
     }
   }
 
@@ -64,24 +53,5 @@ class EwmaStreamFold extends Serializable {
     graft.ext.WindowFns.ewmaFromHourly(hourly)
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { state.clear(); lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(state.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = state.clear()
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ext.TextStats
 
@@ -28,21 +27,18 @@ import graft.ext.TextStats
   * implements: documents land continuously, the quality-filter LM is
   * always current, and no serving pass ever pays a training scan.
   *
-  * foreachBatch re-delivery drops by batchId (the QuantileStreamFold
-  * device); a used checkpoint with an empty fold refuses or rebuilds
-  * via [[FoldRestart.guard]] like every fold here. */
+  * Replay, rebuild and restart follow [[StreamFold]]. */
 class HashedLmFold(uniBuckets: Int = TextStats.T24UniBuckets,
                    biBuckets: Int = TextStats.T24BiBuckets)
-    extends Serializable {
+    extends StreamFold {
 
   private val uniC = new Array[Long](uniBuckets)
   private val biC = new Array[Long](biBuckets)
-  private var lastBatchId = -1L
+  private var version = 0L
   private val instanceId = HashedLmFold.ids.incrementAndGet()
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
-    if (batchId <= lastBatchId) return
+  /** Fold one micro-batch of documents (… text …) into the tables. */
+  def foldBatch(batch: DataFrame): Unit = synchronized {
     if (!batch.isEmpty) {
       val (u, b) = TextStats.hashedLmCountsOf(batch, uniBuckets, biBuckets)
       var i = 0
@@ -50,7 +46,7 @@ class HashedLmFold(uniBuckets: Int = TextStats.T24UniBuckets,
       i = 0
       while (i < b.length) { biC(i) += b(i); i += 1 }
     }
-    lastBatchId = batchId
+    version += 1
   }
 
   /** Score `docs` under the model as trained SO FAR — identical to
@@ -61,28 +57,13 @@ class HashedLmFold(uniBuckets: Int = TextStats.T24UniBuckets,
   def serve(spark: SparkSession, docs: DataFrame): DataFrame =
     synchronized {
       TextStats.hashedLmReport(spark, docs, uniC.clone(), biC.clone(),
-        s"t24fold_${instanceId}_b$lastBatchId")
+        s"t24fold_${instanceId}_v$version")
     }
 
-  /** Rebuild from a landed corpus in one shot (the restart recipe —
-    * exact, because the fold IS the batch kernel's sum). */
-  def rebuildFrom(docs: DataFrame): Unit = synchronized {
+  protected def reset(): Unit = {
     java.util.Arrays.fill(uniC, 0L)
     java.util.Arrays.fill(biC, 0L)
-    lastBatchId = -1L
-    onBatch(docs, 0L)
-  }
-
-  def start(docs: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, lastBatchId >= 0,
-      landed.map(df => () => rebuildFrom(df)))
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
+    version += 1
   }
 }
 

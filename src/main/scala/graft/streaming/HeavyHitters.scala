@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** T16's STREAMING twin — the mergeable-summary property of
   * [[graft.functions.MisraGries]] put on a live feed (the d18'/w6'/w8
@@ -25,19 +24,29 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[graft.ext.TextStats.recountTopK]] kernel as batch t16 — candidates
   * and recount cannot drift between the two shapes.
   *
-  * Restart note: the accumulator is driver state OUTSIDE the streaming
-  * checkpoint. A production run persists the finished summary (a tiny
-  * Map) beside the checkpoint each epoch, or rebuilds it with one
-  * replay of the landed corpus; either restores the recall guarantee
-  * because merge order never affects it.
+  * Restart: the accumulator is driver state OUTSIDE the streaming
+  * checkpoint, so a restart rebuilds it with one replay of the landed
+  * corpus ([[StreamFold]]); that restores the recall guarantee because
+  * merge order never affects it. MG merge ADDS counts, so the replay
+  * guard is correctness here.
   */
-class MgStreamFold(budget: Int) extends Serializable {
+class MgStreamFold(budget: Int) extends StreamFold {
   private val mg = new graft.functions.MisraGries(budget)
   private var acc = mg.zero
 
-  /** Sketch one micro-batch (distributed) and fold it into the running
-    * summary — the foreachBatch body. */
-  def foldBatch(tokenArrays: Dataset[Seq[String]]): Unit = {
+  /** Fold a micro-batch of documents: lower-case, split on spaces, and
+    * sketch the token arrays. */
+  def foldBatch(docs: DataFrame): Unit = {
+    import docs.sparkSession.implicits._
+    foldBatch(docs.select(split(lower(col("text")), " ").as("toks"))
+      .as[Seq[String]])
+  }
+
+  /** Sketch one micro-batch of token arrays (distributed) and fold it
+    * into the running summary. The implicit only tells this overload
+    * apart from the frame one after erasure. */
+  def foldBatch(tokenArrays: Dataset[Seq[String]])
+               (implicit d: DummyImplicit): Unit = {
     val sketch = tokenArrays.select(mg.toColumn.name("c")).head()
     synchronized {
       acc = mg.merge(acc, scala.collection.mutable.HashMap(sketch.toSeq: _*))
@@ -54,15 +63,5 @@ class MgStreamFold(budget: Int) extends Serializable {
   def topK(landedDocs: DataFrame, k: Int): DataFrame =
     graft.ext.TextStats.recountTopK(landedDocs, candidates, k)
 
-  /** Wire a streaming frame with a `text` column into the fold. */
-  def start(docs: DataFrame, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        import batch.sparkSession.implicits._
-        foldBatch(
-          batch.select(split(lower(col("text")), " ").as("toks"))
-            .as[Seq[String]])
-      }
-      .start()
+  protected def reset(): Unit = acc = mg.zero
 }

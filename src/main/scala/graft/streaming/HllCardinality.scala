@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
@@ -28,16 +28,20 @@ import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
   * Idempotence IS exact: a micro-batch re-sketched after a
   * foreachBatch retry folds to identical union state.
   *
-  * Restart note: same contract as the sibling folds — the union is
-  * driver state outside the streaming checkpoint; recovery is one
-  * distributed `hll_sketch_agg` over the landed corpus, exact by the
-  * same register-max argument (pinned in StreamingSpec).
+  * Restart follows [[StreamFold]]: the union is driver state outside
+  * the streaming checkpoint; recovery is one distributed
+  * `hll_sketch_agg` over the landed corpus, exact by the same
+  * register-max argument (pinned in StreamingSpec). The `key`-taking
+  * forms project the frame to that one column.
   */
-class HllStreamFold(lgK: Int = 12) extends Serializable {
+class HllStreamFold(lgK: Int = 12) extends StreamFold {
   private val union = new Union(lgK)
 
+  /** Fold a frame whose first column is the key. */
+  def foldBatch(batch: DataFrame): Unit = foldBatch(batch, batch.columns.head)
+
   /** Sketch one micro-batch (distributed) and fold the finished sketch
-    * into the running union — the foreachBatch body. */
+    * into the running union. */
   def foldBatch(batch: DataFrame, key: String): Unit = {
     val bytes = batch.filter(col(key).isNotNull)
       .select(hll_sketch_agg(col(key), lit(lgK)).as("s"))
@@ -54,19 +58,15 @@ class HllStreamFold(lgK: Int = 12) extends Serializable {
   def sketchBytes: Array[Byte] =
     synchronized(union.getResult(TgtHllType.HLL_4).toCompactByteArray)
 
-  /** Rebuild from the landed corpus (the restart recipe): one
-    * distributed aggregate, no driver-side row traffic. */
-  def rebuildFrom(landed: DataFrame, key: String): Unit = synchronized {
-    union.reset()
-    foldBatch(landed, key)
-  }
+  protected def reset(): Unit = union.reset()
 
-  /** Wire a streaming frame into the fold. */
+  def rebuildFrom(landed: DataFrame, key: String): Unit =
+    rebuildFrom(landed.select(col(key)))
+
   def start(docs: DataFrame, key: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF(), key)
-      }
-      .start()
+    start(docs, key, checkpoint, None)
+
+  def start(docs: DataFrame, key: String, checkpoint: String,
+            landed: Option[DataFrame]): StreamingQuery =
+    start(docs.select(col(key)), checkpoint, landed.map(_.select(col(key))))
 }

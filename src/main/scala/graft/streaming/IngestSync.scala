@@ -44,10 +44,11 @@ import graft.sources.Sources
   * validated, not just the latest version (advisor r15): two or more
   * consecutive orphans mean a manifest publish or a checkpoint-reset
   * batch landed on top of an orphan — a possibly double-merged
-  * history this writer refuses (sys.error) rather than extends. Unlike the fold family this twin needs no [[FoldRestart]]
-  * guard: its state lives in the versioned store, not the JVM, so a
-  * restart resumes correctly from whatever the markers and tags say
-  * is done. */
+  * history this writer refuses (sys.error) rather than extends. Unlike
+  * the fold family this twin is not a [[StreamFold]] and needs no
+  * restart guard: its state lives in the versioned store, not the
+  * JVM, so a restart resumes correctly from whatever the markers and
+  * tags say is done. */
 object IngestSync {
 
   /** The batch-id tag riding inside a stream-published version dir

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A33's streaming twin — the live rank-sum experiment readout.
   * Per-user purchase revenue in exact integer CENTS is an additive
@@ -23,10 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * guard is load-bearing here: a re-delivered batch would double a
   * user's revenue where it could not re-flip a converted bit.
   * Restart = [[rebuildFrom]] over the landed corpus. */
-class MannWhitneyFold extends Serializable {
+class MannWhitneyFold extends StreamFold {
 
   private var users: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (user_id, event_type, value). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -39,16 +37,6 @@ class MannWhitneyFold extends Serializable {
     }
     val ck = merged.localCheckpoint(true)
     synchronized { users = Some(ck) }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded —
-    * the guard is CORRECTNESS here (sum double-counts on replay). */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
   }
 
   /** The a33-shaped rank-sum card over everything folded so far. */
@@ -71,22 +59,5 @@ class MannWhitneyFold extends Serializable {
         Seq.empty[(Long, Long)].toDF("user_id", "cents"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { users = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(users.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = users = None
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A36's streaming twin — the live multi-metric experiment panel with
   * BH correction. The state is the batch op's own per-(user, metric)
@@ -21,10 +20,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (the AbTestStreamFold discipline), eagerly checkpointed per fold.
   * SUM is not idempotent — the [[onBatch]] batchId guard is
   * correctness. Restart = [[rebuildFrom]] over the landed corpus. */
-class MetricPanelFold extends Serializable {
+class MetricPanelFold extends StreamFold {
 
   private var counts: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (user_id, event_type). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -37,16 +35,6 @@ class MetricPanelFold extends Serializable {
     }
     val ck = merged.localCheckpoint(true)
     synchronized { counts = Some(ck) }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded —
-    * the guard is CORRECTNESS (sum double-counts on replay). */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
   }
 
   /** The a36-shaped BH panel over everything folded so far. */
@@ -70,22 +58,5 @@ class MetricPanelFold extends Serializable {
         .toDF("user_id", "event_type", "c"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { counts = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(counts.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = counts = None
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A31's streaming twin — live frequent-path mining. A 3-step path can
   * straddle a micro-batch boundary in two ways (two carried events +
@@ -28,11 +27,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * statement). [[onBatch]] drops foreachBatch retries; restart =
   * [[rebuildFrom]] (no carry ⇒ interior triples are ALL triples).
   */
-class PathStreamFold extends Serializable {
+class PathStreamFold extends StreamFold {
 
   private var pairs: Option[DataFrame] = None
   private var carry2: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (event_id, user_id,
     * event_type, ...). */
@@ -65,15 +63,6 @@ class PathStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a31-shaped report over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = synchronized(pairs) match {
     case Some(p) => graft.etl.Analyze.pathReport(p)
@@ -83,24 +72,5 @@ class PathStreamFold extends Serializable {
         .toDF("step1", "step2", "step3", "user_id", "n"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { pairs = None; carry2 = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(pairs.isDefined || carry2.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { pairs = None; carry2 = None }
 }

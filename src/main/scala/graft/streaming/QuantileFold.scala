@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,16 +30,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (no register-max/idempotent-OR safety net); [[onBatch]] therefore
   * carries the foreachBatch batchId and drops replays — the
   * exactly-once device Spark's sink contract expects of stateful
-  * foreachBatch bodies. Restart follows the sibling folds' contract:
-  * the histogram is driver state outside the streaming checkpoint, and
-  * recovery is ONE distributed grouped count over the landed corpus
-  * ([[rebuildFrom]]), exact by the same additivity argument.
+  * foreachBatch bodies. Restart follows [[StreamFold]]: the histogram
+  * is driver state outside the streaming checkpoint, and recovery is
+  * ONE distributed grouped count over the landed corpus
+  * ([[rebuildFrom]]), exact by the same additivity argument. The
+  * `valueCol`-taking forms project the frame to that one column.
   */
 class QuantileStreamFold(grain: Double = 100.0, maxBins: Int = 100000)
-  extends Serializable {
+  extends StreamFold {
 
   private val hist = scala.collection.mutable.LongMap.empty[Long]
-  private var lastBatchId = -1L
+
+  /** Fold a frame whose first column holds the values. */
+  def foldBatch(batch: DataFrame): Unit = foldBatch(batch, batch.columns.head)
 
   /** Aggregate one micro-batch to its grid histogram (distributed) and
     * fold the bin counts into the running map. */
@@ -57,16 +60,8 @@ class QuantileStreamFold(grain: Double = 100.0, maxBins: Int = 100000)
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId was already folded
-    * (a foreachBatch RETRY re-delivers the same id; additive counts
-    * must not double). */
-  def onBatch(batch: DataFrame, batchId: Long, valueCol: String): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch, valueCol)
-      synchronized { lastBatchId = batchId }
-    }
-  }
+  def onBatch(batch: DataFrame, batchId: Long, valueCol: String): Unit =
+    onBatch(batch.select(col(valueCol)), batchId)
 
   /** Equal-depth bucket upper bounds (bin units) over everything the
     * stream has carried — the a18 serve, through the SAME kernel. */
@@ -92,25 +87,16 @@ class QuantileStreamFold(grain: Double = 100.0, maxBins: Int = 100000)
   def histogram: Seq[(Long, Long)] =
     synchronized(hist.toSeq.sortBy(_._1))
 
-  /** Rebuild from the landed corpus — the restart recipe: one
-    * distributed aggregate, no driver-side row traffic. */
-  def rebuildFrom(landed: DataFrame, valueCol: String): Unit = {
-    synchronized { hist.clear(); lastBatchId = -1L }
-    foldBatch(landed, valueCol)
-  }
+  protected def reset(): Unit = hist.clear()
 
-  /** Wire a streaming frame into the fold. */
+  def rebuildFrom(landed: DataFrame, valueCol: String): Unit =
+    rebuildFrom(landed.select(col(valueCol)))
+
+  def start(rows: DataFrame, valueCol: String, checkpoint: String): StreamingQuery =
+    start(rows, valueCol, checkpoint, None)
+
   def start(rows: DataFrame, valueCol: String, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(hist.nonEmpty),
-      landed.map(l => () => rebuildFrom(l, valueCol)))
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id, valueCol)
-      }
-      .start()
-  }
+            landed: Option[DataFrame]): StreamingQuery =
+    start(rows.select(col(valueCol)), checkpoint,
+      landed.map(_.select(col(valueCol))))
 }

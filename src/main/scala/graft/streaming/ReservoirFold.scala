@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** D41's streaming twin — the live weighted reservoir. Because the
   * batch op's Efraimidis–Spirakis priority is a DETERMINISTIC pure
@@ -20,12 +19,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ([[graft.ext.Curate.weightedSampleDf]] — shared formula, shared
   * rounding, shared tie-break), merges, dedups by doc_id (a replayed
   * micro-batch re-derives identical priorities, so replay is a
-  * content no-op — no batchId guard needed), and keeps the k best.
+  * content no-op even without the batchId guard), and keeps the k best.
   * Late data is absorbed by construction: a higher-priority late row
   * evicts whatever it beats, exactly as a batch rerun would. */
 class ReservoirStreamFold(k: Int = graft.ext.Curate.D41K,
                           seed: Long = graft.ext.Curate.D41Seed)
-    extends Serializable {
+    extends StreamFold {
 
   private var best: Seq[(Long, String, String, Long, Double)] = Seq.empty
 
@@ -50,22 +49,5 @@ class ReservoirStreamFold(k: Int = graft.ext.Curate.D41K,
       .toDF("doc_id", "lang", "source", "n_chars", "priority")
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { best = Seq.empty }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming documents frame into the fold. */
-  def start(docs: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(best.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF())
-      }
-      .start()
-  }
+  protected def reset(): Unit = best = Seq.empty
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A28's streaming twin — live RFM segmentation. The per-user
   * (last_day, freq, cents) triple is a mergeable monoid (max / sum /
@@ -23,10 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * are ADDITIVE ⇒ [[onBatch]] carries the batchId and drops
   * foreachBatch retries; restart = [[rebuildFrom]].
   */
-class RfmStreamFold extends Serializable {
+class RfmStreamFold extends StreamFold {
 
   private var users: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, user_id, event_type,
     * value, ...). */
@@ -44,16 +42,6 @@ class RfmStreamFold extends Serializable {
     synchronized { users = Some(ck) }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded
-    * (additive freq/cents must not double on a retry). */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a28-shaped segment census over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = synchronized(users) match {
     case Some(u) => graft.etl.Analyze.rfmFromUsers(u)
@@ -64,24 +52,5 @@ class RfmStreamFold extends Serializable {
           .toDF("user_id", "last_day", "freq", "cents"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { users = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(users.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = users = None
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** W14's streaming twin — the live rolling cross-correlation matrix.
   * The r12 batch refactor made the twin trivial by design: w14's corpus
@@ -23,12 +22,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * retries; restart = [[rebuildFrom]] over the landed corpus, exact by
   * additivity.
   */
-class RollingCorrStreamFold extends Serializable {
+class RollingCorrStreamFold extends StreamFold {
 
   // (series, hour) -> (Σ v4, n)
   private val state =
     scala.collection.mutable.Map.empty[(String, Long), (Long, Long)]
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, event_type, value, ...). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -42,15 +40,6 @@ class RollingCorrStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The w14-shaped report over everything folded so far, through the
     * byte-identical batch kernel (means, windows, Pearson, rounding). */
   def serve(spark: SparkSession): DataFrame = {
@@ -61,24 +50,5 @@ class RollingCorrStreamFold extends Serializable {
     graft.ext.WindowFns.rollingCorrFromHourly(hourly)
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { state.clear(); lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(state.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = state.clear()
 }

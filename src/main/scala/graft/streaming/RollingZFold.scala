@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A23's streaming twin — the live rolling z-score monitor. The
   * PathFold carry device at depth 20: each batch folds its series'
@@ -23,7 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * a25'/w13' statement). Additive census ⇒ [[onBatch]] carries the
   * batchId and drops foreachBatch retries; restart = [[rebuildFrom]].
   */
-class RollingZStreamFold extends Serializable {
+class RollingZStreamFold extends StreamFold {
 
   // type -> (n_scored, n_anomalies, max_abs_z)
   private val census =
@@ -31,7 +30,6 @@ class RollingZStreamFold extends Serializable {
   // type -> last <=20 (event_id, value), ascending event_id
   private val carry =
     scala.collection.mutable.Map.empty[String, Seq[(Long, Double)]]
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (event_id, event_type, value). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -82,15 +80,6 @@ class RollingZStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a23-shaped census over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -103,24 +92,5 @@ class RollingZStreamFold extends Serializable {
       .orderBy(col("event_type"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { census.clear(); carry.clear(); lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(census.nonEmpty || carry.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { census.clear(); carry.clear() }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A26's streaming twin — live seasonal-profile anomaly monitoring
   * against a TRAINED hour-of-day baseline (the deployment mode: μ/σ per
@@ -24,13 +23,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * corpus — one batch-kernel pass, exact by additivity.
   */
 class SeasonalStreamFold(ref: Map[(String, Int), (Double, Double)])
-    extends Serializable {
+    extends StreamFold {
 
   /** Per-cell carry: (n, nAnomalies, maxAbsZ). */
   private case class S(n: Long, nAnom: Long, maxZ: Double)
 
   private val state = scala.collection.mutable.Map.empty[(String, Int), S]
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (ts, event_type, value, ...). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -50,15 +48,6 @@ class SeasonalStreamFold(ref: Map[(String, Int), (Double, Double)])
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a26-shaped report over everything folded so far. */
   def serve(spark: SparkSession): DataFrame = synchronized {
     import spark.implicits._
@@ -71,24 +60,5 @@ class SeasonalStreamFold(ref: Map[(String, Int), (Double, Double)])
       "max_abs_z")
   }
 
-  /** Rebuild from the landed corpus (the restart recipe). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { state.clear(); lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(state.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = state.clear()
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A32's streaming twin — the live sequential-experiment monitor, which
   * is the ONE analytics card that is semantically *about* being read
@@ -25,7 +24,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * discipline): users-bounded whatever the event volume, eager
   * `localCheckpoint` per fold truncates the accumulated-union lineage.
   * Min-merges make the fold IDEMPOTENT — a replayed micro-batch is a
-  * content no-op — so no batchId replay guard is needed. Restart is
+  * content no-op — even without the batchId replay guard. Restart is
   * [[rebuildFrom]] over the landed corpus: one distributed reduction,
   * exact because the landed events carry every user's true first
   * event and first purchase.
@@ -37,7 +36,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * completes, exactly the group-sequential reading; late events can
   * only move a user's days EARLIER (min), never invalidate a past
   * serve's counts. */
-class SeqAbStreamFold extends Serializable {
+class SeqAbStreamFold extends StreamFold {
 
   private var journeys: Option[DataFrame] = None
 
@@ -77,23 +76,5 @@ class SeqAbStreamFold extends Serializable {
   /** The accumulated per-user journeys frame — exposed for specs. */
   def stateFrame: Option[DataFrame] = synchronized(journeys)
 
-  /** Rebuild from the landed corpus (the restart recipe): one
-    * distributed reduction, no driver-side row traffic. */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { journeys = None }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(journeys.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF())
-      }
-      .start()
-  }
+  protected def reset(): Unit = journeys = None
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** SIM32's streaming twin — the LIVE representation-collapse alarm.
   * The batch card reads a finished corpus; production wants the alarm
@@ -26,15 +25,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * SUM is not idempotent, so the [[onBatch]] batchId guard is
   * correctness (a re-delivered batch would double-count its vectors
   * into the covariance); restart = [[rebuildFrom]] over the landed
-  * (marker-committed — [[FoldRestart.guard]]'s contract) corpus. */
-class SpectrumFold(dim: Int) extends Serializable {
+  * (marker-committed — [[StreamFold]]'s contract) corpus. */
+class SpectrumFold(dim: Int) extends StreamFold {
 
   private val tri = dim * (dim + 1) / 2
   private var n: Long = 0L
   private val sums = new Array[Double](dim)
   private val cross = new Array[Double](tri)
-  private var lastBatchId = -1L
-  private var folded = false
 
   /** Fold one micro-batch of (… embedding: array …) rows. Non-finite
     * rows SKIP, matching the batch kernel's tolerant sketch
@@ -53,16 +50,6 @@ class SpectrumFold(dim: Int) extends Serializable {
       while (i < dim) { sums(i) += flat(1 + i); i += 1 }
       var t = 0
       while (t < tri) { cross(t) += flat(1 + dim + t); t += 1 }
-      folded = true
-    }
-  }
-
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
     }
   }
 
@@ -92,30 +79,9 @@ class SpectrumFold(dim: Int) extends Serializable {
       Array[Array[Double]]) =
     graft.ext.Similarity.basisFromFlat(flatState(), dim)
 
-  /** Rebuild from the landed corpus (the restart recipe; `landed`
-    * must hold marker-committed batches only — see
-    * [[FoldRestart.guard]]). */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized {
-      n = 0L
-      java.util.Arrays.fill(sums, 0.0)
-      java.util.Arrays.fill(cross, 0.0)
-      lastBatchId = -1L
-      folded = false
-    }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming embedding frame into the fold. */
-  def start(embeddings: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    FoldRestart.guard(checkpoint, synchronized(folded),
-      landed.map(l => () => rebuildFrom(l)))
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
+  protected def reset(): Unit = {
+    n = 0L
+    java.util.Arrays.fill(sums, 0.0)
+    java.util.Arrays.fill(cross, 0.0)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A29's streaming twin — the live Kaplan-Meier retention monitor. The
   * batch op's state shape is already streaming-ready: a29 reduces the
@@ -20,8 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `localCheckpoint` per fold truncates the accumulated-union lineage
   * (the g1 fixpoint device), and its size is bounded by |users|
   * whatever the event volume. Min/max make the fold IDEMPOTENT — a
-  * replayed micro-batch merges to a content no-op — so no batchId
-  * replay guard is needed. Restart is [[rebuildFrom]] over the landed
+  * replayed micro-batch merges to a content no-op even without the
+  * batchId replay guard. Restart is [[rebuildFrom]] over the landed
   * corpus: one distributed reduction, exact because the landed events
   * carry every user's true first and last activity.
   *
@@ -32,7 +31,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * resolves to a churn event once the anchor moves past their last
   * activity + 7. A monitor that wants a frozen anchor should snapshot
   * the serve, not the fold. */
-class SurvivalStreamFold extends Serializable {
+class SurvivalStreamFold extends StreamFold {
 
   private var spans: Option[DataFrame] = None
 
@@ -62,25 +61,5 @@ class SurvivalStreamFold extends Serializable {
   /** The accumulated per-user spans frame — exposed for specs. */
   def stateFrame: Option[DataFrame] = synchronized(spans)
 
-  /** Rebuild from the landed corpus (the restart recipe): one
-    * distributed reduction, no driver-side row traffic. */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { spans = None }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(spans.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        foldBatch(batch.toDF())
-      }
-      .start()
-  }
+  protected def reset(): Unit = spans = None
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A25's streaming twin — the live first-order Markov transition
   * matrix. The batch kernel is one lag window per user
@@ -30,12 +29,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * over the landed corpus: one batch-kernel pass, exact because with
   * no prior carry the batch-internal pairs ARE all pairs.
   */
-class TransitionStreamFold extends Serializable {
+class TransitionStreamFold extends StreamFold {
 
   private val counts =
     scala.collection.mutable.Map.empty[(String, String), Long]
   private var lastByUser: Option[DataFrame] = None
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (event_id, user_id,
     * event_type, ...). */
@@ -82,16 +80,6 @@ class TransitionStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded
-    * (additive counts must not double on a retry). */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The a25-shaped report over everything folded so far, through the
     * SAME report kernel as the batch query. */
   def serve(spark: SparkSession): DataFrame = synchronized {
@@ -101,25 +89,5 @@ class TransitionStreamFold extends Serializable {
     graft.etl.Analyze.transitionReport(pairs)
   }
 
-  /** Rebuild from the landed corpus (the restart recipe): one pass of
-    * the batch kernel — no carry, so internal pairs are ALL pairs. */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { counts.clear(); lastByUser = None; lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(counts.nonEmpty || lastByUser.isDefined),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { counts.clear(); lastByUser = None }
 }

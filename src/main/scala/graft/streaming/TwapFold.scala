@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** W13's streaming twin — the live TWAP (time-weighted average) bars.
   * Hold-until-next semantics make this the one fold in the family whose
@@ -31,7 +30,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * carry); restart = [[rebuildFrom]] over the landed corpus. Driver
   * state is series × observed hours + one carry row per series.
   */
-class TwapStreamFold extends Serializable {
+class TwapStreamFold extends StreamFold {
 
   // (series, hour) -> (n_obs, mass = Σ v4·w, w = Σ hold micros)
   private val state =
@@ -39,7 +38,6 @@ class TwapStreamFold extends Serializable {
   // series -> (us, event_id, value) of the pending last observation
   private val carry =
     scala.collection.mutable.Map.empty[String, (Long, Long, Double)]
-  private var lastBatchId = -1L
 
   /** Fold one micro-batch of raw events (event_id, ts, event_type, value). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -76,15 +74,6 @@ class TwapStreamFold extends Serializable {
     }
   }
 
-  /** The foreachBatch body: fold unless this batchId already folded. */
-  def onBatch(batch: DataFrame, batchId: Long): Unit = {
-    val replay = synchronized(batchId <= lastBatchId)
-    if (!replay) {
-      foldBatch(batch)
-      synchronized { lastBatchId = batchId }
-    }
-  }
-
   /** The w13-shaped report over everything folded so far: the folded
     * partials re-enter the BATCH serve kernel, so the division, round,
     * and order rules are the batch op's own. */
@@ -98,25 +87,5 @@ class TwapStreamFold extends Serializable {
         .drop("mass_str"))
   }
 
-  /** Rebuild from the landed corpus (the restart recipe): one fold of
-    * everything ≡ the continuous fold, segment for segment. */
-  def rebuildFrom(landed: DataFrame): Unit = {
-    synchronized { state.clear(); carry.clear(); lastBatchId = -1L }
-    foldBatch(landed)
-  }
-
-  /** Wire a streaming events frame into the fold. */
-  def start(events: DataFrame, checkpoint: String,
-            landed: Option[DataFrame] = None): StreamingQuery = {
-    // refuse to resume a used checkpoint with an empty fold
-    // (FoldRestart doc); `landed` is the rebuild corpus
-    FoldRestart.guard(checkpoint, synchronized(state.nonEmpty || carry.nonEmpty),
-      landed.map(l => () => rebuildFrom(l)))
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        onBatch(batch.toDF(), id)
-      }
-      .start()
-  }
+  protected def reset(): Unit = { state.clear(); carry.clear() }
 }

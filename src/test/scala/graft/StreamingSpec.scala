@@ -655,6 +655,17 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     assert(fold.candidates.size <= 4 * 64 + 12,
       s"fold state unbounded: ${fold.candidates.size}")
+    // MG merge adds counts: a re-delivered committed batch id must not
+    // fold again. Planted at budget 1 (a trim above 4 keys): folding
+    // "b b c d e" a second time over "a a a" would trade candidate a
+    // for b
+    def one(text: String) = Seq((1L, text)).toDF("doc_id", "text")
+    val tiny = new graft.streaming.MgStreamFold(1)
+    tiny.onBatch(one("a a a"), 0L)
+    tiny.onBatch(one("b b c d e"), 1L)
+    assert(tiny.candidates == Seq("a"))
+    tiny.onBatch(one("b b c d e"), 1L)
+    assert(tiny.candidates == Seq("a"), "replay re-merged a committed batch")
     // serve: recount the stream's candidates over the landed rows
     val all = (batch1 ++ batch2).toDF("doc_id", "text")
     val streamed = fold.topK(all, 10)
@@ -697,6 +708,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(a == b)
     // planted truth: r08 occurs 8·3 = 24 times per doc × 60 docs
     assert(a.head == ("r08", 1440L))
+    // the same recipe at start(): a fresh fold on a used checkpoint
+    // refuses without the landed corpus and rebuilds with it
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val ckpt = java.nio.file.Files.createTempDirectory("mgrestart").toString
+    val streamed = new graft.streaming.MgStreamFold(32)
+    val q = streamed.start(in.toDF().toDF("doc_id", "text"), ckpt)
+    in.addData(b1: _*); q.processAllAvailable()
+    in.addData(b2: _*); q.processAllAvailable(); q.stop()
+    assert(streamed.topK(landed, 6).as[(String, Long)].collect().toSeq == a)
+    intercept[IllegalStateException] {
+      new graft.streaming.MgStreamFold(32)
+        .start(in.toDF().toDF("doc_id", "text"), ckpt)
+    }
+    val resumed = new graft.streaming.MgStreamFold(32)
+    resumed.start(in.toDF().toDF("doc_id", "text"), ckpt,
+      landed = Some(landed)).stop()
+    assert(resumed.topK(landed, 6).as[(String, Long)].collect().toSeq == a)
   }
 
   test("d1' Bloom stream dedup: duplicates dropped across an unbounded " +
@@ -775,6 +804,16 @@ class StreamingSpec extends AnyFunSuite {
     val before = fold.estimate
     fold.foldBatch(b2.toDF("doc_id", "user"), "user")
     assert(fold.estimate == before)
+    // a fresh fold on the used checkpoint refuses without the landed
+    // corpus and, given it, rebuilds to the rebuilt fold's estimate
+    intercept[IllegalStateException] {
+      new graft.streaming.HllStreamFold(12)
+        .start(in.toDF().toDF("doc_id", "user"), "user", ckpt)
+    }
+    val f3 = new graft.streaming.HllStreamFold(12)
+    f3.start(in.toDF().toDF("doc_id", "user"), "user", ckpt,
+      Some(landed)).stop()
+    assert(f3.estimate == f2.estimate)
   }
 
   test("d33' streaming CDC apply: ordered merges, later batch wins, " +
@@ -1054,6 +1093,10 @@ class StreamingSpec extends AnyFunSuite {
     val r = live.head
     assert(r._2 == 20L && r._3 == 10.0 && r._5 == 6L && r._7 == 14L)
     assert(r._6 == 0L && r._8 == -1L)
+    // the carry (n, nHi, sHi) is additive: a re-delivered committed
+    // batch id must leave the served card unchanged
+    fold.onBatch(b3.toDF("event_id", "event_type", "value"), 2L)
+    assert(rows(fold.serve(spark)) == live, "replay advanced the carry")
     // restart recipe: refold the landed corpus in one pass ≡ continuous
     val f2 = new graft.streaming.CusumStreamFold(ref)
     f2.rebuildFrom(landed)
@@ -2098,7 +2141,14 @@ class StreamingSpec extends AnyFunSuite {
     val f2 = new HashedLmFold(bu, bb)
     f2.rebuildFrom(all.toDF())
     assert(canon(f2.serve(spark, all.toDF())) == live)
-    // and a used checkpoint + an EMPTY fold refuses loudly (FoldRestart)
+    // a rebuild resets the batch-id guard: the re-delivered, uncommitted
+    // batch 0 of the resumed stream must fold on top of it
+    val f4 = new HashedLmFold(bu, bb)
+    f4.rebuildFrom(b1.toDF())
+    f4.onBatch(b2.toDF(), 0L)
+    assert(canon(f4.serve(spark, all.toDF())) == live,
+      "a rebuilt fold dropped batch 0")
+    // and a used checkpoint + an EMPTY fold refuses loudly (StreamFold)
     val f3 = new HashedLmFold(bu, bb)
     intercept[IllegalStateException] { f3.start(in.toDF(), ckpt) }
   }
@@ -2535,5 +2585,24 @@ class StreamingSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       f3.start(df(Seq.empty), ckpt)
     }
+  }
+
+  test("one fold adapter: only StreamFold.scala and the three twins off " +
+    "it keep a batch-id guard or wire foreachBatch in streaming/") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val dir = Paths.get("src/main/scala/graft/streaming")
+    val allowed = Set("StreamFold.scala", "IngestSync.scala",
+      "BloomDedup.scala", "CdcApply.scala")
+    val offenders = Files.list(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => allowed(p.getFileName.toString))
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        Seq("lastBatchId", "FoldRestart", ".foreachBatch")
+          .filter(src.contains).map(what => s"$p: $what")
+      }.toSeq
+    assert(!Files.exists(dir.resolve("FoldRestart.scala")))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
