@@ -7,15 +7,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Production packaging of the engine's native expressions (SURVEY §2.10
   * tier (c) — `SparkSessionExtensions`): inject the whole function suite
   * at session build, so every session — including `newSession()` clones
-  * and SQL-only clients — resolves `vec_dot`, `vec_cosine`, `simhash64`,
-  * `minhash_bands`, and `shingle_hashes` without any per-call-site
-  * registration. Activate with `.withExtensions(new GraftExtensions)`
+  * and SQL-only clients — resolves `vec_dot`, `vec_cosine`,
+  * `vec_project`, `vec_argmin_cell`, `simhash64`, `simhash64_text`,
+  * `minhash_bands`, `shingle_hashes`, `rolling_chunks` and
+  * `might_contain`. Activate with `.withExtensions(new GraftExtensions)`
   * ([[Sessions.builder]] does) or externally via
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
-  * The per-object `register()` helpers remain for sessions built without
-  * the extension (they write to the session's temp-function registry;
-  * this injects at the builtin layer).
+  * This is the only place that gives the expressions SQL names: the
+  * Column helpers in `graft.functions` wrap the expressions directly
+  * (`org.apache.spark.sql.graft.NativeColumn`) and touch no registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import graft.functions._
@@ -30,6 +31,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (es: Seq[Expression]) => DotProduct(es(0), es(1))))
     ext.injectFunction((FunctionIdentifier("vec_cosine"), info("vec_cosine"),
       (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
+    ext.injectFunction((FunctionIdentifier("vec_project"), info("vec_project"),
+      (es: Seq[Expression]) => VecProject(es(0), es(1), es(2))))
+    ext.injectFunction((FunctionIdentifier("vec_argmin_cell"), info("vec_argmin_cell"),
+      (es: Seq[Expression]) => VecArgminCell(es(0), es(1))))
     ext.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
       (es: Seq[Expression]) => SimHash64(es.head)))
     ext.injectFunction((FunctionIdentifier("simhash64_text"), info("simhash64_text"),

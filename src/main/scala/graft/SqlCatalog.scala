@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * view under its canonical name, after which a SQL-ONLY client — a JDBC
   * notebook, a `spark.sql` REPL, a BI tool on a Thrift server — can run
   * the engine's whole relational surface with no Scala at all. The
-  * native expression suite (vec_dot/vec_cosine/simhash64/minhash_bands/
+  * native expression suite (vec_dot/vec_cosine/vec_project/
+  * vec_argmin_cell/simhash64/simhash64_text/minhash_bands/
   * shingle_hashes/rolling_chunks/might_contain) is injected at the
   * builtin layer by [[GraftExtensions]], so those resolve from SQL text
   * in every session clone too — `SELECT vec_cosine(a.embedding,

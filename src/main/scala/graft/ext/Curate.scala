@@ -97,7 +97,7 @@ object Curate {
     val bloomBytes = graft.functions.BloomProbe.serialize(
       graft.functions.BloomProbe.buildHashed(benchGrams, "gram", nGrams, fpp))
     val mightContain = (g: Column) =>
-      graft.functions.BloomProbe.mightContainHashed(train.sparkSession, bloomBytes, g)
+      graft.functions.BloomProbe.mightContainHashed(bloomBytes, g)
     // the verify semi-join is deliberately UNHINTED: in the op's target
     // regime the bench gram set does NOT fit a broadcast, and both join
     // inputs are already small — the corpus side shrank to hits+fpp at

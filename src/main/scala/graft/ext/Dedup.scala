@@ -35,9 +35,8 @@ object Dedup {
     * they cannot be LSH-banded (degenerate signature) or Jaccard-compared
     * (0/0). */
   private def hashedDocs(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
     df.select(col("doc_id"),
-        graft.functions.ShingleHashes.shingleHashes(spark, col("text"), 3)
+        graft.functions.ShingleHashes.shingleHashes(col("text"), 3)
           .as("sh_hashes"))
       .filter(size(col("sh_hashes")) > 0)
   }
@@ -99,11 +98,10 @@ object Dedup {
   private def bandedDocs(documents: DataFrame,
                          bands: Int, rowsPerBand: Int,
                          oph: Boolean = false): DataFrame = {
-    val spark = documents.sparkSession
     val bandsCol =
-      if (oph) graft.functions.MinHashOph.minhashBandsOph(spark,
+      if (oph) graft.functions.MinHashOph.minhashBandsOph(
         col("sh_hashes"), bands, rowsPerBand)
-      else graft.functions.MinHash.minhashBands(spark,
+      else graft.functions.MinHash.minhashBands(
         col("sh_hashes"), bands, rowsPerBand)
     hashedDocs(documents)
       .select(col("doc_id"),
@@ -215,11 +213,9 @@ object Dedup {
     * (the earlier dataflow form exploded every token and shuffled them
     * into a 64-column aggregate — same bits, but the token shuffle
     * dominates at scale). */
-  def simhash(df: DataFrame): DataFrame = {
-    graft.functions.TextHash.register(df.sparkSession)
+  def simhash(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
-      call_function("simhash64_text", col("text")).as("simhash"))
-  }
+      graft.functions.TextHash.simhash64Text(col("text")).as("simhash"))
 
   /** Memoized per-(session, dir) documents row count — sizing
     * [[blocksFor]] needs |corpus| but must not pay a count() job per
@@ -1117,7 +1113,7 @@ object Dedup {
         .filter(col("id_a") < col("id_b"))
         // fused codegen cosine (r21) — bit-identical to the HOF form;
         // this slice×corpus truth scan dominated the cold d49 build
-        .filter(round(graft.functions.VectorOps.vecCosine(spark,
+        .filter(round(graft.functions.VectorOps.vecCosine(
           col("emb_a"), col("emb_b")), 4) >= D50Tau))
     val semServed = pairSet(
       semDedupParts(semAssigned, semCenters, D50Tau)._1
@@ -1196,7 +1192,7 @@ object Dedup {
       // fused codegen cosine (r21) — same ascending-i sums and division
       // as the zip_with/aggregate HOF it replaces, bit-identical on the
       // equal-dim (emb, centroid) inputs every caller feeds
-      round(graft.functions.VectorOps.vecCosine(assigned.sparkSession,
+      round(graft.functions.VectorOps.vecCosine(
         col("emb"), element_at(cLit, col("cell") + 1)), 4).as("cent_sim"))
     val kept = keepBest(prioDocs,
       pairs.select(col("id_a"), col("id_b")), -col("cent_sim"))
@@ -1296,7 +1292,6 @@ object Dedup {
     * from the full-corpus pass on a borderline or zero-norm vector. */
   private[graft] def batchCellCosines(batch: DataFrame,
       corpus: DataFrame): DataFrame = {
-    val spark = batch.sparkSession
     // The sim27 fan-out treatment (r16 verdict ask #1) on the LARGER
     // side: when the batch is small enough to broadcast, the
     // O(batch·cellsize) cosine fan-out's parallelism falls to the
@@ -1310,7 +1305,7 @@ object Dedup {
       .join(corpus.select(col("cell"), col("vec_id").as("id_a"),
         col("emb").as("emb_a")).repartition(col("cell")), Seq("cell"))
       .select(col("cell"), col("id_a"), col("id_b"),
-        round(graft.functions.VectorOps.vecCosine(spark,
+        round(graft.functions.VectorOps.vecCosine(
           col("emb_a"), col("emb_b")), 4).as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
   }
@@ -1368,10 +1363,9 @@ object Dedup {
 
   private[graft] def chunkContainment(docs: DataFrame, cap: Int = 20,
       threshold: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
     val fps = docs.select(col("doc_id"),
         explode(graft.functions.RollingChunks.rollingChunks(
-          spark, col("text"), 16, 5)).as("fp"))
+          col("text"), 16, 5)).as("fp"))
       .distinct()
     val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("n_chunks"))
     val fpFreq = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))

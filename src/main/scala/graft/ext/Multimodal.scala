@@ -389,14 +389,13 @@ object Multimodal {
     * against. */
   def mm4AlignmentFilterDf(docs: DataFrame, emb: DataFrame,
                            refEmb: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
     val asD = (c: Column) => transform(c, x => x.cast("double"))
     val ref = refEmb.select(asD(col("embedding")).as("ref"))
     docs.select(col("doc_id"), col("source"))
       .join(emb.select(col("doc_id"), asD(col("embedding")).as("emb")), Seq("doc_id"))
       .crossJoin(broadcast(ref))
       .withColumn("align",
-        round(graft.functions.VectorOps.vecCosine(spark, col("emb"), col("ref")), 4))
+        round(graft.functions.VectorOps.vecCosine(col("emb"), col("ref")), 4))
       .filter(!isnan(col("align")))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),

@@ -71,7 +71,7 @@ object Similarity {
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4).as("cos_sim"))
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -102,7 +102,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .filter(col("label") === col("qlabel"))
       .select(col("vec_id"), col("label"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4)
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -150,7 +150,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         asDouble(col("embedding")).as("emb"))
-      .withColumn("proj", VectorOps.vecProject(spark, col("emb"),
+      .withColumn("proj", VectorOps.vecProject(col("emb"),
         typedlit(muZero), typedlit(basis)))
     val a = e.select(col("vec_id"), col("label"), col("emb").as("emb_a"),
       col("proj").as("proj_a"))
@@ -165,9 +165,9 @@ object Similarity {
       // fused codegen cosine (same ascending-i sums, same division —
       // bit-identical to the zip_with/aggregate HOF on equal-dim inputs)
       .withColumn("cos_orig",
-        round(VectorOps.vecCosine(spark, col("emb_a"), col("emb_b")), 4))
+        round(VectorOps.vecCosine(col("emb_a"), col("emb_b")), 4))
       .withColumn("cos_proj",
-        round(VectorOps.vecCosine(spark, col("proj_a"), col("proj_b")), 4))
+        round(VectorOps.vecCosine(col("proj_a"), col("proj_b")), 4))
       .filter(!isnan(col("cos_orig")) && !isnan(col("cos_proj")))
       .withColumn("co", round(col("cos_orig") * 10000, 0).cast("long"))
       .withColumn("cp", round(col("cos_proj") * 10000, 0).cast("long"))
@@ -266,7 +266,7 @@ object Similarity {
     val coarse = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .withColumn("cos_coarse",
-        round(VectorOps.vecCosine(spark,
+        round(VectorOps.vecCosine(
           slice(col("emb"), 1, d0), slice(col("qemb"), 1, d0)), 4))
       .filter(!isnan(col("cos_coarse")))
       .orderBy(col("cos_coarse").desc, col("vec_id"))
@@ -274,7 +274,7 @@ object Similarity {
     // stage 2: exact full-dim rerank of the C candidates
     coarse
       .withColumn("cos_sim",
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4))
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4))
       .filter(!isnan(col("cos_sim")))
       .select(col("vec_id"), col("cos_coarse"), col("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -318,7 +318,6 @@ object Similarity {
   private[graft] def knnGraph(assigned: DataFrame,
                               kNeighbors: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = assigned.sparkSession
     // The pair fan-out is this operator's dominant cost by
     // construction, so its parallelism must not be hostage to the
     // PROBE side's partition count: a store-served `assigned` small
@@ -340,7 +339,7 @@ object Similarity {
     val scored = l.join(r, Seq("cell"))
       .filter(col("src_id") =!= col("nbr_id"))
       .select(col("src_id"), col("nbr_id"),
-        round(VectorOps.vecCosine(spark, col("emb_a"), col("emb_b")), 4)
+        round(VectorOps.vecCosine(col("emb_a"), col("emb_b")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
     val w = Window.partitionBy(col("src_id"))
@@ -883,10 +882,10 @@ object Similarity {
       // quantization error each row pays under this quantizer
       assigned.join(broadcast(cf), Seq("cell"))
         .select(col("cell"),
-          (graft.functions.VectorOps.vecDot(spark, col("emb"), col("emb"))
-            - lit(2.0) * graft.functions.VectorOps.vecDot(spark,
+          (graft.functions.VectorOps.vecDot(col("emb"), col("emb"))
+            - lit(2.0) * graft.functions.VectorOps.vecDot(
               col("emb"), col("ctr"))
-            + graft.functions.VectorOps.vecDot(spark, col("ctr"),
+            + graft.functions.VectorOps.vecDot(col("ctr"),
               col("ctr"))).as("sqd"))
     }
     def card(s: DataFrame, tag: String): DataFrame = {
@@ -1027,7 +1026,6 @@ object Similarity {
     * false deletion downstream. */
   private[graft] def keyedNearDupPairs(keyed: DataFrame, key: String,
                                        threshold: Double): DataFrame = {
-    val spark = keyed.sparkSession
     // The sim27 fan-out treatment (r16 verdict ask #1): the pair
     // stage's O(N·keysize) cosine fan-out is this kernel's dominant
     // cost, and its parallelism must not be hostage to the PROBE
@@ -1049,7 +1047,7 @@ object Similarity {
       // drops it before its distinct) — r14 verdict ask #3: ONE pair
       // kernel for every keyed near-dup caller
       .select(col(key), col("id_a"), col("id_b"),
-        round(VectorOps.vecCosine(spark, col("emb_a"), col("emb_b")), 4)
+        round(VectorOps.vecCosine(col("emb_a"), col("emb_b")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")) && col("cos_sim") >= threshold)
   }
@@ -1059,10 +1057,9 @@ object Similarity {
   /** Signature bucket: one bit per hyperplane (sign of the projection).
     * Projections use the fused codegen vec_dot — one loop per plane, no
     * per-element interpreted lambdas on the bucketing scan. */
-  private def signature(spark: SparkSession, emb: Column,
-                        planes: Array[Array[Double]]): Column =
+  private def signature(emb: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      when(VectorOps.vecDot(spark, emb, planeLit(p)) > 0, lit(1L << i))
+      when(VectorOps.vecDot(emb, planeLit(p)) > 0, lit(1L << i))
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -1114,7 +1111,7 @@ object Similarity {
     val planes = hyperplanes(nPlanes, 64)
     val e = embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("bucket", signature(spark, col("emb"), planes))
+      .withColumn("bucket", signature(col("emb"), planes))
     val q = e.filter(col("vec_id") === 0)
       .select(col("emb").as("qemb"), col("bucket").as("qbucket"))
     val masks = probeMasks(nPlanes, radius)
@@ -1124,7 +1121,7 @@ object Similarity {
     e.filter(col("vec_id") =!= 0)
       .join(broadcast(probes), Seq("bucket"))
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4).as("cos_sim"))
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -1153,7 +1150,7 @@ object Similarity {
     val planes = hyperplanes(nPlanes, 64)
     val e = embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("bucket", signature(spark, col("emb"), planes))
+      .withColumn("bucket", signature(col("emb"), planes))
     keyedNearDupPairs(e, "bucket", threshold = 0.25)
       // a pair co-bucketed under several keys must report once: drop
       // the key before the distinct
@@ -1233,7 +1230,7 @@ object Similarity {
         col("cell").isin(probeCells.toIndexedSeq.map(Integer.valueOf): _*))
       .crossJoin(broadcast(qDf))
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4).as("cos_sim"))
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -1381,7 +1378,7 @@ object Similarity {
       asDouble(col("embedding")).as("qemb"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4)
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
     val w = org.apache.spark.sql.expressions.Window
@@ -1423,7 +1420,7 @@ object Similarity {
       asDouble(col("embedding")).as("qemb"))
     e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4)
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")) && col("cos_sim") >= tau)
       .orderBy(col("q_id"), col("cos_sim").desc, col("vec_id"))
@@ -1500,7 +1497,7 @@ object Similarity {
     index.assigned.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("cell_rank"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4)
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
   }
@@ -1619,7 +1616,6 @@ object Similarity {
   /** The same audit over any (label, embedding) frame — dim-injectable
     * for planted-cluster specs. */
   def centroidSeparationDf(embeddings: DataFrame, dim: Int): DataFrame = {
-    val spark = embeddings.sparkSession
     val vmean = udaf(new graft.functions.VectorMean(dim))
     val cents = embeddings
       .filter(col("embedding").isNotNull)
@@ -1629,7 +1625,7 @@ object Similarity {
     val r = cents.select(col("label").as("label_b"), col("centroid").as("cb"))
     l.join(r, col("label_a") < col("label_b"))
       .select(col("label_a"), col("label_b"),
-        round(graft.functions.VectorOps.vecCosine(spark, col("ca"), col("cb")), 4)
+        round(graft.functions.VectorOps.vecCosine(col("ca"), col("cb")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("label_a"), col("label_b"))
@@ -1647,7 +1643,6 @@ object Similarity {
     * round to (cos marginally above 1 from fp accumulation) so both
     * engines print identical zeros. */
   def embeddingDriftDf(v1: DataFrame, v2: DataFrame, dim: Int): DataFrame = {
-    val spark = v1.sparkSession
     val vmean = udaf(new graft.functions.VectorMean(dim))
     def cents(df: DataFrame, cName: String, keepN: Boolean): DataFrame = {
       val base = df.filter(col("embedding").isNotNull)
@@ -1659,7 +1654,7 @@ object Similarity {
     cents(v1, "c1", keepN = true)
       .join(cents(v2, "c2", keepN = false), Seq("label"))
       .select(col("label"), col("n_vecs"),
-        (round(lit(1.0) - VectorOps.vecCosine(spark, col("c1"), col("c2")), 4)
+        (round(lit(1.0) - VectorOps.vecCosine(col("c1"), col("c2")), 4)
           + lit(0.0)).as("drift"))
       .filter(!isnan(col("drift")))
       .orderBy(col("drift").desc, col("label"))
@@ -1868,11 +1863,10 @@ object Similarity {
     * One scan, zero shuffle; only (vec_id, emb, proj) rows come out. */
   private[graft] def pcaProjectFrame(df: DataFrame, mu: Array[Double],
       basis: Array[Array[Double]], scales: Array[Double]): DataFrame = {
-    val spark = df.sparkSession
     val scaled = basis.zip(scales)
       .map { case (b, s) => b.map(_ * s).toIndexedSeq }.toIndexedSeq
     df.select(col("vec_id").cast("long").as("vec_id"), col("emb"),
-      VectorOps.vecProject(spark, col("emb"),
+      VectorOps.vecProject(col("emb"),
         typedlit(mu.toIndexedSeq), typedlit(scaled)).as("proj"))
   }
 
@@ -1896,7 +1890,6 @@ object Similarity {
   private[graft] def pcaDecisionOf(embeddings: DataFrame, dim: Int,
       r: Int, basis: Option[(Long, Array[Double], Array[Double],
         Array[Array[Double]])] = None): Option[PcaDecision] = {
-    val spark = embeddings.sparkSession
     val (n, mu, eigs, vecs) = basis.getOrElse(pcaBasis(embeddings, dim))
     if (n == 0) return None
     val trace = eigs.sum
@@ -1927,8 +1920,8 @@ object Similarity {
       // over the pinned narrow rows.
       val scored = e.filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
-          round(VectorOps.vecCosine(spark, col("emb"), qemb), 4).as("ct"),
-          round(VectorOps.vecCosine(spark, col("proj"), qproj), 4).as("cp"))
+          round(VectorOps.vecCosine(col("emb"), qemb), 4).as("ct"),
+          round(VectorOps.vecCosine(col("proj"), qproj), 4).as("cp"))
         .localCheckpoint(true)
       def top10(c: String): Set[Long] = scored
         .select(col("vec_id"), col(c).as("c"))
@@ -2029,9 +2022,9 @@ object Similarity {
       val qproj = qRows.head.getSeq[Double](1)
       proj.filter(col("vec_id") =!= 0)
         .select(col("vec_id") +:
-          round(VectorOps.vecCosine(spark, col("emb"), qemb), 4).as("ct") +:
+          round(VectorOps.vecCosine(col("emb"), qemb), 4).as("ct") +:
           rs.sorted.map(r =>
-            round(VectorOps.vecCosine(spark, slice(col("proj"), 1, r),
+            round(VectorOps.vecCosine(slice(col("proj"), 1, r),
               typedlit(qproj.take(r))), 4).as(s"c_$r")): _*)
         .localCheckpoint(true)
     }
@@ -2106,7 +2099,6 @@ object Similarity {
     * (vec_id, proj, white) rows come out — never the d-dim input. */
   private[graft] def pcaProjectBoth(df: DataFrame, mu: Array[Double],
       basis: Array[Array[Double]], eigs: Array[Double]): DataFrame = {
-    val spark = df.sparkSession
     val r = basis.length
     val s = whitenScales(eigs, r)
     val plain = basis.map(_.toIndexedSeq).toIndexedSeq
@@ -2114,9 +2106,9 @@ object Similarity {
       .map { case (b, j) => b.map(_ * s(j)).toIndexedSeq }.toIndexedSeq
     val muLit = typedlit(mu.toIndexedSeq)
     df.select(col("vec_id").cast("long").as("vec_id"),
-      VectorOps.vecProject(spark, col("emb"), muLit, typedlit(plain))
+      VectorOps.vecProject(col("emb"), muLit, typedlit(plain))
         .as("proj"),
-      VectorOps.vecProject(spark, col("emb"), muLit, typedlit(white))
+      VectorOps.vecProject(col("emb"), muLit, typedlit(white))
         .as("white"))
   }
 
@@ -2198,7 +2190,7 @@ object Similarity {
     val top = proj.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("neighbor_id"),
-        round(VectorOps.vecCosine(spark, col("proj"), col("qproj")), 4)
+        round(VectorOps.vecCosine(col("proj"), col("qproj")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
@@ -2241,7 +2233,7 @@ object Similarity {
       .withColumn("scale",
         array_max(transform(col("v"), x => abs(x))) / 127.0)
       .filter(col("scale") > 0)
-      .withColumn("c", round(VectorOps.vecCosine(spark, col("v"),
+      .withColumn("c", round(VectorOps.vecCosine(col("v"),
         transform(col("v"), x => round(x / col("scale"), 0) * col("scale"))), 4))
       .groupBy(col("label")).agg(
         count(lit(1)).as("n_vecs"),
@@ -2425,7 +2417,7 @@ object Similarity {
     embeddings
       .join(broadcast(cand), Seq("vec_id"), "left_semi")
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark,
+        round(VectorOps.vecCosine(
           asDouble(col("embedding")), qLit), 4).as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -2670,7 +2662,7 @@ object Similarity {
     val qLit = array(l2unit(q).toIndexedSeq.map(lit): _*)
     emb.join(broadcast(cand), Seq("vec_id"), "left_semi")
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark,
+        round(VectorOps.vecCosine(
           asDouble(col("embedding")), qLit), 4).as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -2781,7 +2773,7 @@ object Similarity {
       .join(broadcast(cand), Seq("vec_id"))
       .join(broadcast(qDf), Seq("q_id"))
       .select(col("n_probe"), col("q_id"), col("vec_id"), col("rn"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4)
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4)
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .localCheckpoint(true)
@@ -2892,7 +2884,7 @@ object Similarity {
     val qLit = array(qn.toIndexedSeq.map(lit): _*)
     emb.join(broadcast(cand.select(col("vec_id"))), Seq("vec_id"), "left_semi")
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark,
+        round(VectorOps.vecCosine(
           asDouble(col("embedding")), qLit), 4).as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -2957,11 +2949,11 @@ object Similarity {
 
   def int8Ann(spark: SparkSession, emb: DataFrame, queryVecId: Long,
               topK: Int = 10, pool: Int = 8): DataFrame =
-    int8AnnFromCodes(spark, emb, int8Codes(emb), queryVecId, topK, pool)
+    int8AnnFromCodes(emb, int8Codes(emb), queryVecId, topK, pool)
 
   /** Serve pass against a PRE-BUILT code frame (the registered query
     * path; the inline-encode [[int8Ann]] remains the spec shape). */
-  private def int8AnnFromCodes(spark: SparkSession, emb: DataFrame,
+  private def int8AnnFromCodes(emb: DataFrame,
                                codes: DataFrame, queryVecId: Long,
                                topK: Int, pool: Int): DataFrame = {
     // NULL-embedding query must hit the empty-result early return, not
@@ -2976,13 +2968,13 @@ object Similarity {
     val qLit = array(qn.toIndexedSeq.map(lit): _*)
     val cand = codes.filter(col("vec_id") =!= queryVecId)
       .select(col("vec_id"),
-        VectorOps.vecCosine(spark, col("code"), qLit).as("acos"))
+        VectorOps.vecCosine(col("code"), qLit).as("acos"))
       .filter(!isnan(col("acos")))
       .orderBy(col("acos").desc, col("vec_id"))
       .limit(topK * pool)
     emb.join(broadcast(cand.select(col("vec_id"))), Seq("vec_id"), "left_semi")
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark,
+        round(VectorOps.vecCosine(
           asDouble(col("embedding")), qLit), 4).as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -2990,7 +2982,7 @@ object Similarity {
   }
 
   def sim21Int8Ann(spark: SparkSession, dir: String): DataFrame =
-    int8AnnFromCodes(spark, Tables.embeddings(spark, dir),
+    int8AnnFromCodes(Tables.embeddings(spark, dir),
       int8CodesFor(spark, dir), queryVecId = 0L, topK = 10, pool = 8)
 
   /** Pool depth per retriever leg and the standard RRF constant
@@ -3037,7 +3029,7 @@ object Similarity {
     val den = emb.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
-        round(VectorOps.vecCosine(spark,
+        round(VectorOps.vecCosine(
           asDouble(col("embedding")), col("qemb")), 4).as("cos_sim"))
       .filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col("doc_id")).limit(Sim22Pool)
@@ -3087,7 +3079,7 @@ object Similarity {
     val cands = e.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(VectorOps.vecCosine(spark, col("emb"), col("qemb")), 4)
+        round(VectorOps.vecCosine(col("emb"), col("qemb")), 4)
           .as("rel"),
         col("emb"))
       .orderBy(col("rel").desc, col("vec_id"))
@@ -3144,8 +3136,7 @@ object Similarity {
     // measurably bloats plan analysis once cellsFor pushes k into the
     // hundreds (the r15 10× probe's dominant cost).
     batch.withColumn("cell", graft.functions.VectorOps.vecArgminCell(
-      batch.sparkSession, col("emb"),
-      typedLit(centers.map(_.toSeq).toSeq)))
+      col("emb"), typedLit(centers.map(_.toSeq).toSeq)))
 
   /** SIM23 — incremental ANN index maintenance (r13 verdict ask #2):
     * the d18 batch-vs-persisted-index discipline applied to the

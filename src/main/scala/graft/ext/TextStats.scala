@@ -371,7 +371,7 @@ object TextStats {
     Tables.documents(spark, dir)
       .select(col("source"),
         explode(graft.functions.RollingChunks.rollingChunks(
-          spark, col("text"), 16, 5)).as("chunk_fp"))
+          col("text"), 16, 5)).as("chunk_fp"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_chunks"),
         countDistinct(col("chunk_fp")).as("n_distinct_chunks"))
@@ -1004,24 +1004,16 @@ object TextStats {
     * corpus, and O(|table|)/token worse from there; see LmScore's
     * scaladoc for the measurement). NULL for docs with fewer than two
     * tokens — callers filter, which is the old size(toks) ≥ 2 gate. */
-  private def bigramDocScore(spark: SparkSession, uni: Map[String, Long],
-                             bi: Map[String, Long], key: String): Column =
-    graft.functions.LmScore.score(spark, col("text"), uni, bi, key)
-
-  /** Registry-name content key for a (dir, caps) table pair — the
-    * bigramCounts memo key rendered as an identifier, so the temp-
-    * function name is DETERMINISTIC per table set (advisor r13: the
-    * identityHashCode form could collide across distinct instances). */
-  private def lmKey(dir: String, a: Int, b: Int): String =
-    s"${Similarity.dirTag(dir)}_${a}_$b"
+  private def bigramDocScore(uni: Map[String, Long],
+                             bi: Map[String, Long]): Column =
+    graft.functions.LmScore.score(col("text"), uni, bi)
 
   def t22BigramLogprob(spark: SparkSession, dir: String,
                        maxVocab: Int = 65536,
                        maxBigrams: Int = 1 << 18): DataFrame = {
     val (uni, bi) = bigramCounts(spark, dir, maxVocab, maxBigrams)
     Tables.documents(spark, dir)
-      .withColumn("score",
-        bigramDocScore(spark, uni, bi, lmKey(dir, maxVocab, maxBigrams)))
+      .withColumn("score", bigramDocScore(uni, bi))
       .filter(col("score").isNotNull)
       .groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
@@ -1059,9 +1051,7 @@ object TextStats {
     val (uni, bi) = bigramCounts(spark, dir, 65536, 1 << 18)
     Curate.cutoffOn(
       Tables.documents(spark, dir)
-        .withColumn("score",
-          round(bigramDocScore(spark, uni, bi,
-            lmKey(dir, 65536, 1 << 18)), 4))
+        .withColumn("score", round(bigramDocScore(uni, bi), 4))
         .filter(col("score").isNotNull)
         .select(col("source"), col("score")),
       frac)
@@ -1116,16 +1106,12 @@ object TextStats {
       hashedLmCountsOf(Tables.documents(spark, dir), uniBuckets, biBuckets))
 
   /** The t24 report tail over ANY docs frame and count tables — the
-    * serve half shared with [[graft.streaming.HashedLmFold]]. `key`
-    * names the scorer registration (must be unique per table VERSION:
-    * call_function resolves at analysis time, so a rebind under a
-    * reused name would point an earlier unexecuted frame at newer
-    * tables). */
-  private[graft] def hashedLmReport(spark: SparkSession, docs: DataFrame,
-      uniC: Array[Long], biC: Array[Long], key: String): DataFrame =
+    * serve half shared with [[graft.streaming.HashedLmFold]]. */
+  private[graft] def hashedLmReport(docs: DataFrame,
+      uniC: Array[Long], biC: Array[Long]): DataFrame =
     docs
-      .withColumn("score", graft.functions.LmScore.scoreHashed(
-        spark, col("text"), uniC, biC, key))
+      .withColumn("score",
+        graft.functions.LmScore.scoreHashed(col("text"), uniC, biC))
       .filter(col("score").isNotNull)
       .groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
@@ -1164,8 +1150,7 @@ object TextStats {
                   uniBuckets: Int = T24UniBuckets,
                   biBuckets: Int = T24BiBuckets): DataFrame = {
     val (uc, bc) = hashedLmCounts(spark, dir, uniBuckets, biBuckets)
-    hashedLmReport(spark, Tables.documents(spark, dir), uc, bc,
-      lmKey(dir, uniBuckets, biBuckets))
+    hashedLmReport(Tables.documents(spark, dir), uc, bc)
   }
   private def t24Registered(spark: SparkSession, dir: String): DataFrame =
     t24HashedLm(spark, dir)

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, XxHash64Function}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -15,9 +16,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * ships the right primitive already — the internal
   * [[BloomFilterMightContain]] expression that powers runtime row-level
   * join filtering — it just isn't in the public function registry. This
-  * object registers it (the [[ShingleHashes]] dual-registration
-  * discipline: temp-function here, builtin layer in
-  * [[graft.GraftExtensions]]) and pins the KEYING convention that makes
+  * object builds it as a Column ([[graft.GraftExtensions]] gives it the
+  * SQL name `might_contain`) and pins the KEYING convention that makes
   * build and probe agree.
   *
   * Keying: `BloomFilterMightContain` probes with `mightContainLong`, so
@@ -47,16 +47,6 @@ object BloomProbe {
     * the driver-side probe agrees with the distributed one. */
   private val Seed = 42L
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("might_contain")
-    // GraftExtensions-built sessions already inject it at the builtin
-    // layer; re-registering would only log a replaced-function warning.
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction("might_contain",
-        exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
-  }
-
   /** The binary image [[BloomFilterMightContain]] deserializes. */
   def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -79,12 +69,9 @@ object BloomProbe {
     * Null keys → false (the old udf's `k != null &&` guard, kept —
     * `xxhash64(null)` folds to the seed and would otherwise probe a
     * phantom element). */
-  def mightContainHashed(spark: SparkSession, filterBytes: Array[Byte],
-                         key: Column): Column = {
-    register(spark)
-    key.isNotNull && call_function("might_contain", lit(filterBytes),
-      xxhash64(key))
-  }
+  def mightContainHashed(filterBytes: Array[Byte], key: Column): Column =
+    key.isNotNull && column(BloomFilterMightContain(
+      expression(lit(filterBytes)), expression(xxhash64(key))))
 
   /** Driver-side membership probe with the SAME keying as the
     * distributed path (specs and serving). */

@@ -189,37 +189,19 @@ case class LmScoreHashed(child: Expression,
 }
 
 object LmScore {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
   /** The scorer as a Column. The count tables can't ride SQL literals
     * (that IS the linear-scan trap this expression removes), so they
-    * ride the registry builder's closure — under a name DERIVED FROM
-    * THE CALLER'S CONTENT KEY (the bigramCounts memo key: dirTag +
-    * caps), because `call_function` resolves at ANALYSIS time: a
-    * shared name would let a later registration for another dir
-    * capture an earlier, still-unexecuted frame. The key is
-    * deterministic where the r13 identityHashCode form was not
-    * (identity hashes can collide across distinct table instances —
-    * advisor r13); two calls with the same key carry the same memoized
-    * tables by construction, so re-registration under that name is
-    * idempotent rather than a rebind hazard. */
-  def score(spark: SparkSession, text: Column, uni: Map[String, Long],
-            bi: Map[String, Long], key: String): Column = {
-    val name = "lm_score_" + key.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LmScore(exprs.head, uni, bi), "built-in")
-    call_function(name, text)
-  }
+    * ride the expression node: each Column carries the tables it was
+    * built with, whatever is built after it. */
+  def score(text: Column, uni: Map[String, Long],
+            bi: Map[String, Long]): Column =
+    column(LmScore(expression(text), uni, bi))
 
-  /** The bucket-keyed scorer as a Column — same registration contract
-    * as [[score]] (content-key-derived name; the hashed count arrays
-    * are memoized per (session, dir, buckets) upstream). */
-  def scoreHashed(spark: SparkSession, text: Column, uniC: Array[Long],
-                  biC: Array[Long], key: String): Column = {
-    val name = "lm_score_hashed_" + key.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LmScoreHashed(exprs.head, uniC, biC), "built-in")
-    call_function(name, text)
-  }
+  /** The bucket-keyed scorer as a Column (the hashed count arrays are
+    * memoized per (session, dir, buckets) upstream). */
+  def scoreHashed(text: Column, uniC: Array[Long],
+                  biC: Array[Long]): Column =
+    column(LmScoreHashed(expression(text), uniC, biC))
 }

@@ -134,22 +134,9 @@ case class MinHashBands(child: Expression, bands: Int, rowsPerBand: Int)
 }
 
 object MinHash {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
-  /** Register minhash_bands(hashes, bands, rowsPerBand) in the session
-    * function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands", exprs => MinHashBands(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-
-  def minhashBands(spark: SparkSession, hashes: Column,
-                   bands: Int, rowsPerBand: Int): Column = {
-    register(spark)
-    call_function("minhash_bands", hashes,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(rowsPerBand))
-  }
+  def minhashBands(hashes: Column, bands: Int, rowsPerBand: Int): Column =
+    column(MinHashBands(expression(hashes), bands, rowsPerBand))
 }

@@ -154,20 +154,9 @@ case class MinHashBandsOph(child: Expression, bands: Int, rowsPerBand: Int)
 }
 
 object MinHashOph {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands_oph", exprs => MinHashBandsOph(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-
-  def minhashBandsOph(spark: SparkSession, hashes: Column,
-                      bands: Int, rowsPerBand: Int): Column = {
-    register(spark)
-    call_function("minhash_bands_oph", hashes,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(rowsPerBand))
-  }
+  def minhashBandsOph(hashes: Column, bands: Int, rowsPerBand: Int): Column =
+    column(MinHashBandsOph(expression(hashes), bands, rowsPerBand))
 }

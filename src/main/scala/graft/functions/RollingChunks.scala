@@ -87,21 +87,9 @@ case class RollingChunks(child: Expression, window: Int, maskBits: Int)
 }
 
 object RollingChunks {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
-  /** Register rolling_chunks(text, window, maskBits). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_chunks", exprs => RollingChunks(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-
-  def rollingChunks(spark: SparkSession, text: Column,
-                    window: Int, maskBits: Int): Column = {
-    register(spark)
-    call_function("rolling_chunks", text,
-      org.apache.spark.sql.functions.lit(window),
-      org.apache.spark.sql.functions.lit(maskBits))
-  }
+  def rollingChunks(text: Column, window: Int, maskBits: Int): Column =
+    column(RollingChunks(expression(text), window, maskBits))
 }

@@ -81,19 +81,9 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
-  /** Register shingle_hashes(text, n) in the session function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  def shingleHashes(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("shingle_hashes", text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleHashes(text: Column, n: Int): Column =
+    column(ShingleHashes(expression(text), n))
 }

@@ -160,23 +160,11 @@ case class SimHashText(child: Expression) extends UnaryExpression {
 }
 
 object TextHash {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
-  /** Register simhash64 + simhash64_text in the session function
-    * registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64_text", exprs => SimHashText(exprs.head), "built-in")
-  }
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 
-  def simhash64(spark: SparkSession, tokens: Column): Column = {
-    register(spark); call_function("simhash64", tokens)
-  }
-
-  def simhash64Text(spark: SparkSession, text: Column): Column = {
-    register(spark); call_function("simhash64_text", text)
-  }
+  def simhash64Text(text: Column): Column =
+    column(SimHashText(expression(text)))
 }

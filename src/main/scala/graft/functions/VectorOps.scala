@@ -377,41 +377,17 @@ case class VecProject(first: Expression, second: Expression,
 }
 
 object VectorOps {
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 
-  /** Register the expressions in the session's function registry (the
-    * Column↔Expression bridge is private[sql] in Spark 4, so Columns are
-    * built by name via call_function). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_argmin_cell", exprs => VecArgminCell(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_project", exprs => VecProject(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-  }
+  def vecProject(emb: Column, mu: Column, basis: Column): Column =
+    column(VecProject(expression(emb), expression(mu), expression(basis)))
 
-  def vecProject(spark: org.apache.spark.sql.SparkSession,
-                 emb: Column, mu: Column, basis: Column): Column = {
-    register(spark); call_function("vec_project", emb, mu, basis)
-  }
+  def vecArgminCell(emb: Column, centers: Column): Column =
+    column(VecArgminCell(expression(emb), expression(centers)))
 
-  def vecArgminCell(spark: org.apache.spark.sql.SparkSession,
-                    emb: Column, centers: Column): Column = {
-    register(spark); call_function("vec_argmin_cell", emb, centers)
-  }
+  def vecDot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  def vecDot(spark: org.apache.spark.sql.SparkSession,
-             a: Column, b: Column): Column = {
-    register(spark); call_function("vec_dot", a, b)
-  }
-
-  def vecCosine(spark: org.apache.spark.sql.SparkSession,
-                a: Column, b: Column): Column = {
-    register(spark); call_function("vec_cosine", a, b)
-  }
+  def vecCosine(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

@@ -56,11 +56,6 @@ object WelfordStats extends Aggregator[java.lang.Double, Moments, (Double, Doubl
   override def bufferEncoder: Encoder[Moments] = Encoders.product[Moments]
   override def outputEncoder: Encoder[(Double, Double)] =
     Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-
-  /** Register as SQL function `welford_stats(x) -> struct(mean, var)`.
-    * Idempotent per session. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("welford_stats", udaf(WelfordStats))
 }
 
 object WelfordQueries {
@@ -68,11 +63,10 @@ object WelfordQueries {
   /** U1 — per-flag quantity moments via the custom Aggregator, verified
     * value-for-value against DuckDB's avg/var_samp. */
   def u1WelfordStats(spark: SparkSession, dir: String): DataFrame = {
-    WelfordStats.register(spark)
     Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
-        expr("welford_stats(CAST(l_quantity AS DOUBLE))").as("st"))
+        udaf(WelfordStats).apply(col("l_quantity").cast("double")).as("st"))
       .select(col("l_returnflag"), col("n"),
         round(col("st._1"), 4).as("mean_qty"),
         round(col("st._2"), 4).as("var_qty"))

@@ -55,8 +55,8 @@ class BloomStreamDedup(expectedItems: Long, fpp: Double) extends Serializable {
   def foldBatch(batch: DataFrame, key: String): DataFrame = {
     val f = synchronized(filter)
     val bytes = graft.functions.BloomProbe.serialize(f)
-    val neverSeen = !graft.functions.BloomProbe.mightContainHashed(
-      batch.sparkSession, bytes, col(key))
+    val neverSeen =
+      !graft.functions.BloomProbe.mightContainHashed(bytes, col(key))
     // Eager localCheckpoint: the survivor set is consumed twice (filter
     // build + sink) and must be decided against ONE filter snapshot.
     val fresh = batch.dropDuplicates(key).filter(neverSeen)

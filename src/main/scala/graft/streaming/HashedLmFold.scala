@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ext.TextStats
@@ -34,8 +32,6 @@ class HashedLmFold(uniBuckets: Int = TextStats.T24UniBuckets,
 
   private val uniC = new Array[Long](uniBuckets)
   private val biC = new Array[Long](biBuckets)
-  private var version = 0L
-  private val instanceId = HashedLmFold.ids.incrementAndGet()
 
   /** Fold one micro-batch of documents (… text …) into the tables. */
   def foldBatch(batch: DataFrame): Unit = synchronized {
@@ -46,27 +42,18 @@ class HashedLmFold(uniBuckets: Int = TextStats.T24UniBuckets,
       i = 0
       while (i < b.length) { biC(i) += b(i); i += 1 }
     }
-    version += 1
   }
 
   /** Score `docs` under the model as trained SO FAR — identical to
-    * batch t24 trained on everything folded to this point. The scorer
-    * registers under a per-(instance, state-version) name: the tables
-    * snapshot (clone) rides the registration, so a later batch cannot
-    * rebind an earlier, still-unexecuted served frame. */
+    * batch t24 trained on everything folded to this point. The
+    * scorer expression carries a snapshot (clone) of the tables, so a
+    * later batch cannot change an earlier, still-unexecuted served
+    * frame. */
   def serve(spark: SparkSession, docs: DataFrame): DataFrame =
-    synchronized {
-      TextStats.hashedLmReport(spark, docs, uniC.clone(), biC.clone(),
-        s"t24fold_${instanceId}_v$version")
-    }
+    synchronized { TextStats.hashedLmReport(docs, uniC.clone(), biC.clone()) }
 
   protected def reset(): Unit = {
     java.util.Arrays.fill(uniC, 0L)
     java.util.Arrays.fill(biC, 0L)
-    version += 1
   }
-}
-
-object HashedLmFold {
-  private val ids = new AtomicLong(0L)
 }

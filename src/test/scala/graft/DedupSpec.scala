@@ -405,17 +405,16 @@ class DedupSpec extends AnyFunSuite {
   test("OPH band keys are deterministic and identical sets agree bit-for-bit") {
     val docs = Seq((0L, base + " alpha beta gamma delta epsilon zeta"),
       (1L, base + " alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val spark2 = spark
     import org.apache.spark.sql.functions.{col => c}
     val keys = docs.select(c("doc_id"),
-      graft.functions.MinHashOph.minhashBandsOph(spark2,
-        graft.functions.ShingleHashes.shingleHashes(spark2, c("text"), 3), 8, 4)
+      graft.functions.MinHashOph.minhashBandsOph(
+        graft.functions.ShingleHashes.shingleHashes(c("text"), 3), 8, 4)
         .as("keys"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(keys(0L) == keys(1L)) // identical text → identical signature
     val again = docs.select(c("doc_id"),
-      graft.functions.MinHashOph.minhashBandsOph(spark2,
-        graft.functions.ShingleHashes.shingleHashes(spark2, c("text"), 3), 8, 4)
+      graft.functions.MinHashOph.minhashBandsOph(
+        graft.functions.ShingleHashes.shingleHashes(c("text"), 3), 8, 4)
         .as("keys"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(keys == again) // rerun-deterministic

@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Functions injected through SparkSessionExtensions must resolve in a
-  * FRESH session clone — temp-function registration (the fallback path)
-  * is session-scoped and would NOT survive newSession(), so this
-  * discriminates real injection from a leftover register() call. */
+  * FRESH session clone: a temp function is session-scoped and would NOT
+  * survive newSession(), so this discriminates real injection from a
+  * registration made on the parent session. */
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -26,6 +26,12 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(fresh.sql(
       "SELECT size(minhash_bands(shingle_hashes('one two three four', 3), 8, 4))")
       .head().getInt(0) == 8)
+    assert(fresh.sql("SELECT vec_project(array(2.0d, 3.0d), array(0.5d, 1.0d), " +
+      "array(array(1.0d, 1.0d), array(0.0d, 2.0d)))")
+      .head().getSeq[Double](0) == Seq(3.5, 4.0))
+    assert(fresh.sql("SELECT vec_argmin_cell(array(1.0d, 1.0d), " +
+      "array(array(5.0d, 5.0d), array(1.0d, 2.0d), array(1.0d, 2.0d)))")
+      .head().getInt(0) == 1)
   }
 
   test("SqlCatalog: a SQL-only client runs the surface — tables, joins, " +
@@ -73,5 +79,20 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("DATATYPE_MISMATCH") ||
       err.getMessage.toLowerCase.contains("array"))
+  }
+
+  test("one function path: src/main writes no function registry and " +
+    "calls no function by name outside GraftExtensions.scala") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "GraftExtensions.scala")
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        Seq("createOrReplaceTempFunction", "udf.register", "def register(",
+          "call_function(").filter(src.contains).map(what => s"$p: $what")
+      }.toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -31,7 +31,7 @@ class PropertySpec extends AnyFunSuite {
     val texts = samples(text, 200)
     val df = texts.toDF("text")
       .withColumn("fused",
-        ShingleHashes.shingleHashes(spark, col("text"), 3))
+        ShingleHashes.shingleHashes(col("text"), 3))
       .withColumn("words", split(lower(col("text")), " "))
       .withColumn("hof",
         when(size(col("words")) >= 3, expr(
@@ -76,7 +76,6 @@ class PropertySpec extends AnyFunSuite {
       Gen.listOfN(n, Gen.chooseNum(0L, 2147483646L)))
     val rnd = new scala.util.Random(3)
     val pairs = samples(hashes, 150).map(h => (h, rnd.shuffle(h)))
-    graft.functions.MinHash.register(spark)
     val df = pairs.toDF("a", "b")
       .withColumn("ka", expr("minhash_bands(a, 8, 4)"))
       .withColumn("kb", expr("minhash_bands(b, 8, 4)"))
@@ -84,7 +83,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("text-fused simhash equals the token-array form on 200 random texts") {
-    graft.functions.TextHash.register(spark)
     val texts = samples(text, 200)
     val df = texts.toDF("text")
       .withColumn("fused", expr("simhash64_text(text)"))

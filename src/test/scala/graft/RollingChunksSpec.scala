@@ -17,7 +17,7 @@ class RollingChunksSpec extends AnyFunSuite {
 
   private def chunks(texts: String*): Seq[Seq[Long]] =
     texts.toDF("text")
-      .select(RollingChunks.rollingChunks(spark, col("text"), 16, 5).as("c"))
+      .select(RollingChunks.rollingChunks(col("text"), 16, 5).as("c"))
       .as[Seq[Long]].collect().toSeq
 
   test("identical text chunks identically; chunks cover the document") {
@@ -55,7 +55,7 @@ class RollingChunksSpec extends AnyFunSuite {
 
   test("empty and null inputs are safe") {
     val out = Seq(Some(""), None).toDF("text")
-      .select(RollingChunks.rollingChunks(spark, col("text"), 16, 5).as("c"))
+      .select(RollingChunks.rollingChunks(col("text"), 16, 5).as("c"))
       .collect()
     assert(out(0).getSeq[Long](0).isEmpty)
     assert(out(1).isNullAt(0))

@@ -27,7 +27,7 @@ class ShingleHashesSpec extends AnyFunSuite {
       "repeat repeat repeat repeat repeat"  // collapsing duplicates
     ).toDF("text")
     val fused = df.select(
-        ShingleHashes.shingleHashes(spark, col("text"), 3).as("h"))
+        ShingleHashes.shingleHashes(col("text"), 3).as("h"))
       .as[Seq[Long]].collect().map(_.toSet)
     val hof = hofHashes(df).as[Seq[Long]].collect().map(_.toSet)
     assert(fused.toSeq == hof.toSeq)
@@ -37,7 +37,7 @@ class ShingleHashesSpec extends AnyFunSuite {
     val df = Seq(Some("two words"), Some(""), None,
       Some("exactly three words")).toDF("text")
     val out = df.select(
-        ShingleHashes.shingleHashes(spark, col("text"), 3).as("h"))
+        ShingleHashes.shingleHashes(col("text"), 3).as("h"))
       .collect().map(r => Option(r.getSeq[Long](0)))
     assert(out(0).get.isEmpty) // 2 words < n
     assert(out(1).get.isEmpty)
@@ -47,7 +47,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("registered SQL surface rejects non-string input at analysis time") {
-    ShingleHashes.register(spark)
     val err = intercept[Exception] {
       Seq(1L).toDF("x").selectExpr("shingle_hashes(x, 3)").collect()
     }

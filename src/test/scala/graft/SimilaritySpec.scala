@@ -115,7 +115,7 @@ class SimilaritySpec extends AnyFunSuite {
       val exp = vecs.filter(col("vec_id") =!= qId)
         .crossJoin(q)
         .select(col("vec_id"),
-          round(graft.functions.VectorOps.vecCosine(spark,
+          round(graft.functions.VectorOps.vecCosine(
             toDouble, col("qemb")), 4)
             .as("c"))
         .orderBy(col("c").desc, col("vec_id"))
@@ -633,7 +633,7 @@ class SimilaritySpec extends AnyFunSuite {
       .crossJoin(bc(q))
       .filter($"label" === $"qlabel")
       .select($"vec_id",
-        round(graft.functions.VectorOps.vecCosine(spark,
+        round(graft.functions.VectorOps.vecCosine(
           expr("transform(embedding, x -> cast(x as double))"),
           expr("transform(qemb, x -> cast(x as double))")), 4).as("cos_sim"))
       .orderBy($"cos_sim".desc, $"vec_id")

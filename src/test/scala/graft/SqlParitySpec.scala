@@ -254,7 +254,8 @@ class SqlParitySpec extends AnyFunSuite {
     "w18_lateness_audit",
     // fourth wave (r14 verdict ask #6 — the enumerated respellable
     // tail: oracles whose only DuckDB-isms are epoch()/`//`/unnest,
-    // or none at all; see README "SQL-parity surface"):
+    // or none at all; see "SQL-parity surface" in the git history of
+    // README.md, e.g. `git show 5d7a9f0:README.md`):
     "a27_ab_test", "a32_sequential_ab", "g2_triangle_count",
     "g3_degree_stats", "j12_interval_join", "mm8_header_probe",
     "p8_column_profile", "w19_watermark_horizon",

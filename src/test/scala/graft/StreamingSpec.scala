@@ -2119,18 +2119,18 @@ class StreamingSpec extends AnyFunSuite {
       TDoc(3, "solo", "fr", "s", 4))
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
-    def batchTrained(landed: Seq[TDoc], tag: String): Seq[String] = {
+    def batchTrained(landed: Seq[TDoc]): Seq[String] = {
       val df = landed.toDF()
       val (u, b) = TextStats.hashedLmCountsOf(df, bu, bb)
-      canon(TextStats.hashedLmReport(spark, df, u, b, s"t24test_$tag"))
+      canon(TextStats.hashedLmReport(df, u, b))
     }
     in.addData(b1: _*); q.processAllAvailable()
-    assert(canon(fold.serve(spark, b1.toDF())) == batchTrained(b1, "w1"),
+    assert(canon(fold.serve(spark, b1.toDF())) == batchTrained(b1),
       "fold model after batch 1 diverged from a batch train on wave 1")
     in.addData(b2: _*); q.processAllAvailable()
     val all = b1 ++ b2
     val live = canon(fold.serve(spark, all.toDF()))
-    assert(live == batchTrained(all, "w2"),
+    assert(live == batchTrained(all),
       "fold model after batch 2 diverged from a batch train on all waves")
     // a re-delivered committed batch id must not double-count
     fold.onBatch(b1.toDF(), 0L)
@@ -2151,6 +2151,39 @@ class StreamingSpec extends AnyFunSuite {
     // and a used checkpoint + an EMPTY fold refuses loudly (StreamFold)
     val f3 = new HashedLmFold(bu, bb)
     intercept[IllegalStateException] { f3.start(in.toDF(), ckpt) }
+  }
+
+  test("t24' serving adds no session function; a served frame keeps the " +
+    "model it was served under after later batches") {
+    import spark.implicits._
+    import graft.ext.TextStats
+    import graft.streaming.HashedLmFold
+    val dir = "/root/testdata/sf0.001"
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.listFunction().size
+    val fold = new HashedLmFold(64, 128)
+    val waves = (0 until 5).map(w => (0 until 3).map(i =>
+      TDoc(10L * w + i, s"w$w a b w$w c w$i", if (i % 2 == 0) "en" else "fr",
+        "s", 12)))
+    val docs = waves.flatten.toDF()
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq
+    waves.init.zipWithIndex.foreach { case (wave, id) =>
+      fold.onBatch(wave.toDF(), id.toLong)
+      canon(fold.serve(spark, docs))
+    }
+    val pending = fold.serve(spark, docs) // built now, run after batch 5
+    val preBatch5 = canon(fold.serve(spark, docs))
+    fold.onBatch(waves.last.toDF(), 4L)
+    val postBatch5 = canon(fold.serve(spark, docs))
+    TextStats.t22BigramLogprob(spark, dir).collect()
+    TextStats.t23PerplexityFilter(spark, dir).collect()
+    TextStats.t24HashedLm(spark, dir).collect()
+    assert(registry.listFunction().size == before,
+      s"function registry grew from $before to ${registry.listFunction().size}")
+    assert(postBatch5 != preBatch5, "batch 5 did not change the model")
+    assert(canon(pending) == preBatch5,
+      "a frame served before batch 5 ran under the post-batch-5 model")
   }
 
   test("s21' streaming landing sync ≡ manifest incrementalSync on the " +

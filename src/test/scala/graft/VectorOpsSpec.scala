@@ -22,23 +22,22 @@ class VectorOpsSpec extends AnyFunSuite {
     val hof = vecs.select(col("id"), Similarity.cosine(col("a"), col("b")).as("c"))
       .as[(Long, Double)].collect().toMap
     val native = vecs.select(col("id"),
-      VectorOps.vecCosine(spark, col("a"), col("b")).as("c"))
+      VectorOps.vecCosine(col("a"), col("b")).as("c"))
       .as[(Long, Double)].collect().toMap
     hof.foreach { case (id, c) => assert(c == native(id), s"id $id") }
   }
 
   test("vec_dot matches hand computation and handles nulls") {
     val got = vecs.filter(col("id") === 1)
-      .select(VectorOps.vecDot(spark, col("a"), col("b"))).as[Double].head()
+      .select(VectorOps.vecDot(col("a"), col("b"))).as[Double].head()
     assert(got == 4.0 + 6.0 + 6.0 + 4.0)
     val withNull = Seq((Some(Array(1.0)), Option.empty[Array[Double]]))
       .toDF("a", "b")
-    val r = withNull.select(VectorOps.vecDot(spark, col("a"), col("b"))).head()
+    val r = withNull.select(VectorOps.vecDot(col("a"), col("b"))).head()
     assert(r.isNullAt(0))
   }
 
-  test("expressions are SQL-callable after registration") {
-    VectorOps.register(spark)
+  test("expressions are SQL-callable: injected by GraftExtensions") {
     vecs.createOrReplaceTempView("vecs_test")
     val r = spark.sql(
       "SELECT vec_dot(a, b) AS d, vec_cosine(a, a) AS self FROM vecs_test WHERE id = 1")
@@ -70,7 +69,7 @@ class VectorOpsSpec extends AnyFunSuite {
       (2L, Seq(0.5, -0.25, 0.125, 8.0)),
       (3L, Seq(1e-8, 1e8, -1e-8, -1e8)))
     val got = rows.toDF("id", "x")
-      .select(col("id"), VectorOps.vecProject(spark, col("x"),
+      .select(col("id"), VectorOps.vecProject(col("x"),
         typedlit(mu), typedlit(basis)).as("p"))
       .as[(Long, Seq[Double])].collect().toMap
     rows.foreach { case (id, x) =>
@@ -78,22 +77,21 @@ class VectorOpsSpec extends AnyFunSuite {
     }
     // float embeddings read through the specialized getter
     val gotF = Seq((1L, Seq(1f, 2f, 3f, 4f))).toDF("id", "x")
-      .select(VectorOps.vecProject(spark, col("x"),
+      .select(VectorOps.vecProject(col("x"),
         typedlit(mu), typedlit(basis)))
       .as[Seq[Double]].head()
     assert(gotF == scalar(Seq(1.0, 2.0, 3.0, 4.0)))
     // null embedding -> null result (BinaryExpression null semantics)
     val r = Seq((1L, Option.empty[Seq[Double]])).toDF("id", "x")
-      .select(VectorOps.vecProject(spark, col("x"),
+      .select(VectorOps.vecProject(col("x"),
         typedlit(mu), typedlit(basis))).head()
     assert(r.isNullAt(0))
     // a short basis row accumulates over the shared prefix
     val short = Seq((1L, Seq(2.0, 3.0, 5.0, 7.0))).toDF("id", "x")
-      .select(VectorOps.vecProject(spark, col("x"),
+      .select(VectorOps.vecProject(col("x"),
         typedlit(mu), typedlit(Seq(Seq(1.0, 1.0))))).as[Seq[Double]].head()
     assert(short == Seq((2.0 - 0.5) + (3.0 - (-0.25))))
-    // SQL-callable after registration (the VectorOps contract)
-    VectorOps.register(spark)
+    // SQL-callable: injected by GraftExtensions
     Seq((1L, Seq(1.0, 2.0, 3.0, 4.0))).toDF("id", "x")
       .createOrReplaceTempView("vp_probe")
     val viaSql = spark.sql(
@@ -126,26 +124,26 @@ class VectorOpsSpec extends AnyFunSuite {
           .cast("int").as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val fused = emb
-      .select(col("vec_id"), VectorOps.vecArgminCell(spark, col("emb"),
+      .select(col("vec_id"), VectorOps.vecArgminCell(col("emb"),
         typedLit(centers.map(_.toSeq).toSeq)).as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(fused == hof, "fused argmin diverged from the HOF form")
     // tie rule: two identical centers — the FIRST index wins
     val tie = Seq((0L, Seq(1.0, 0.0))).toDF("vec_id", "emb")
-      .select(VectorOps.vecArgminCell(spark, col("emb"),
+      .select(VectorOps.vecArgminCell(col("emb"),
         typedLit(Seq(Seq(0.0, 1.0), Seq(1.0, 0.0), Seq(1.0, 0.0))))
         .as("cell"))
     assert(tie.head().getInt(0) == 1, "tie must keep the first min index")
     // null propagation: a null embedding assigns null, not a crash
     val n = Seq((0L, null: Seq[Double])).toDF("vec_id", "emb")
-      .select(VectorOps.vecArgminCell(spark, col("emb"),
+      .select(VectorOps.vecArgminCell(col("emb"),
         typedLit(Seq(Seq(1.0, 0.0)))).as("cell"))
     assert(n.head().isNullAt(0))
     // EMPTY centers (k=0) → NULL, mirroring the HOF form's array_min
     // over zero distances — never a silent cell 0 (advisor r15). Both
     // paths pinned: interpreted eval (typedLit folded) and codegen.
     val k0 = Seq((0L, Seq(1.0, 0.0))).toDF("vec_id", "emb")
-      .select(VectorOps.vecArgminCell(spark, col("emb"),
+      .select(VectorOps.vecArgminCell(col("emb"),
         typedLit(Seq.empty[Seq[Double]])).as("cell"))
     assert(k0.head().isNullAt(0), "k=0 must be NULL, not cell 0")
     val k0i = graft.functions.VecArgminCell(

@@ -11,10 +11,9 @@ class WelfordSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("welford_stats matches built-in avg/var_samp incl. null skipping") {
-    WelfordStats.register(spark)
     val df = Seq[java.lang.Double](1.0, 2.0, null, 4.0, 8.0, null, 16.0)
       .toDF("x")
-    val got = df.agg(expr("welford_stats(x)").as("st"),
+    val got = df.agg(udaf(WelfordStats).apply(col("x")).as("st"),
         avg(col("x")).as("m"), var_samp(col("x")).as("v"))
       .select(col("st._1"), col("st._2"), col("m"), col("v")).head()
     assert(math.abs(got.getDouble(0) - got.getDouble(2)) < 1e-12)
@@ -22,13 +21,12 @@ class WelfordSpec extends AnyFunSuite {
   }
 
   test("result is independent of partitioning (merge is correct)") {
-    WelfordStats.register(spark)
     // 4-decimal agreement — the query surface's rounding; double merge
     // order shifts the last couple of ulps, which is inherent, not a bug.
     val vals = (1 to 1000).map(i => (i % 7).toString -> (i * 0.37 + 1e6))
     def stats(parts: Int) =
       vals.toDF("k", "x").repartition(parts)
-        .groupBy("k").agg(expr("welford_stats(x)").as("st"))
+        .groupBy("k").agg(udaf(WelfordStats).apply(col("x")).as("st"))
         .select(col("k"), round(col("st._1"), 4), round(col("st._2"), 4))
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
         .toSet
