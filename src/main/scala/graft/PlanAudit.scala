@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted physical plans for scale-critical queries so
   * pushdown / broadcast / codegen can be audited. `census` mode instead
   * prints one line per REGISTERED query — shuffle-exchange count, join

@@ -306,7 +306,7 @@ object Curate {
     * connected-components composition text dedup uses. Returns the kept
     * rows. The assignment is checkpointed before the self-join — without
     * it the k-means transform lineage would execute once per join side. */
-  def semanticDedupDf(spark: SparkSession, embeddings: DataFrame,
+  def semanticDedupDf(embeddings: DataFrame,
                       k: Int, threshold: Double): DataFrame = {
     val assigned =
       Similarity.ivfIndex(embeddings, k).assigned.localCheckpoint(true)

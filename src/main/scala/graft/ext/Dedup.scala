@@ -1,5 +1,6 @@
 package graft.ext
 
+import scala.annotation.unused
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -1202,7 +1203,7 @@ object Dedup {
 
   /** The d50 census card: per IVF cell, members / within-cell dup
     * pairs / dropped members / keep rate. */
-  def semDedupReport(spark: SparkSession, assigned: DataFrame,
+  def semDedupReport(assigned: DataFrame,
                      centers: Array[Array[Double]],
                      tau: Double = D50Tau): DataFrame = {
     val (pairs, kept) = semDedupParts(assigned, centers, tau)
@@ -1265,7 +1266,7 @@ object Dedup {
     // cell work (one memoized sketch pass per session)
     Similarity.requireHealthyGeometry(spark, dir, "d50 semantic dedup")
     val (assigned, centers, _) = d50Assigned(spark, dir)
-    semDedupReport(spark, assigned, centers)
+    semDedupReport(assigned, centers)
   }
 
   /** D51 — INCREMENTAL semantic dedup: d18's daily-crawl discipline
@@ -1463,7 +1464,7 @@ object Dedup {
     * pow/round with both engines evaluating the same expression
     * shapes. The grid points are i/20 with i integer, so both engines
     * start from identical doubles. */
-  def d54LshTuningCurve(spark: SparkSession, dir: String): DataFrame =
+  def d54LshTuningCurve(spark: SparkSession, @unused dir: String): DataFrame =
     lshTuningCurve(spark, bands = 8, rowsPerBand = 4)
 
   private[graft] def lshTuningCurve(spark: SparkSession, bands: Int,

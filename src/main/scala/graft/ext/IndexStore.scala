@@ -67,7 +67,7 @@ object IndexStore {
   private def hadoopConf(spark: SparkSession) =
     spark.sparkContext.hadoopConfiguration
 
-  private def root(spark: SparkSession): Path = new Path(
+  private def root: Path = new Path(
     sys.props.getOrElse("graft.index.store",
       sys.env.getOrElse("SPARK_GRAFT_INDEX_STORE",
         System.getProperty("java.io.tmpdir") + "/graft_index_store")))
@@ -139,7 +139,7 @@ object IndexStore {
 
   private def datasetRoot(spark: SparkSession, dir: String,
                           tables: Seq[String]): Path =
-    new Path(root(spark),
+    new Path(root,
       Similarity.dirTag(dir) + "_" + combinedFingerprint(spark, dir, tables))
 
   /** Self-description record at each dataset root: the source tables
@@ -288,7 +288,7 @@ object IndexStore {
     val p = datasetRoot(spark, dir, Seq(table))
     val fs = p.getFileSystem(hadoopConf(spark))
     fs.delete(p, true)
-    val r = root(spark)
+    val r = root
     if (fs.exists(r))
       fs.listStatus(r).toSeq.filter(_.isDirectory)
         .filter(st => isRootOfTag(st.getPath.getName,
@@ -359,7 +359,7 @@ object IndexStore {
   def gcStore(spark: SparkSession, dirs: Seq[String],
               superseded: Seq[String] = Nil,
               tmpAgeMs: Long = 3600000L): Seq[String] = {
-    val r = root(spark)
+    val r = root
     val fs = r.getFileSystem(hadoopConf(spark))
     if (!fs.exists(r)) return Seq.empty
     // "now" from the FILESYSTEM'S OWN clock, not the client's

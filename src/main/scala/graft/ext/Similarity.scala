@@ -253,9 +253,9 @@ object Similarity {
     * outrank every number). C ≥ corpus degenerates to brute force,
     * spec-pinned ≡ sim1. */
   def sim26MatryoshkaAnn(spark: SparkSession, dir: String): DataFrame =
-    matryoshkaTopK(spark, Tables.embeddings(spark, dir))
+    matryoshkaTopK(Tables.embeddings(spark, dir))
 
-  private[graft] def matryoshkaTopK(spark: SparkSession,
+  private[graft] def matryoshkaTopK(
       embeddings: DataFrame, d0: Int = 16, overfetch: Int = 100,
       k: Int = 10): DataFrame = {
     val e = embeddings.select(col("vec_id"),
@@ -506,7 +506,7 @@ object Similarity {
     * artifact parts and the generation split. */
   private[graft] def whatifFor(spark: SparkSession, dir: String, k: Int,
       base: IvfIndex): (Map[String, DataFrame], Long) = {
-    val split = generationSplit(spark, base)
+    val split = generationSplit(base)
     val cur = base.assigned.select(col("vec_id"), col("emb"))
       .filter(col("vec_id") >= split)
     val parts = IndexStore.loadOrBuild(spark, dir, "embeddings",
@@ -861,7 +861,7 @@ object Similarity {
     * ([[graft.etl.Analyze.idMidpoint]]) in one agg(min, max) read —
     * both verbs MUST cut the same boundary or the committed index
     * would not be the priced one. */
-  private def generationSplit(spark: SparkSession, base: IvfIndex): Long =
+  private def generationSplit(base: IvfIndex): Long =
     graft.etl.Analyze.idMidpoint(
       base.assigned.select(col("vec_id")), col("vec_id"))
       .head().getLong(0)
@@ -1091,7 +1091,7 @@ object Similarity {
     * the r11 radius-1 point served 0.2, below serving grade). */
   def sim2AnnLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    sim2AnnLshDf(spark, e, planesFor(corpusSize(spark, dir), minPlanes = 8))
+    sim2AnnLshDf(e, planesFor(corpusSize(spark, dir), minPlanes = 8))
   }
 
   /** All XOR masks over `nPlanes` bits with popcount ≤ radius —
@@ -1106,7 +1106,7 @@ object Similarity {
   }
 
   /** Same ANN pipeline with an explicit plane count (unit-testable). */
-  def sim2AnnLshDf(spark: SparkSession, embeddings: DataFrame,
+  def sim2AnnLshDf(embeddings: DataFrame,
                    nPlanes: Int, radius: Int = Sim2ProbeRadius): DataFrame = {
     val planes = hyperplanes(nPlanes, 64)
     val e = embeddings
@@ -1141,11 +1141,11 @@ object Similarity {
     * in the plane count is what ScalaTest pins instead. */
   def sim3NearDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val e0 = Tables.embeddings(spark, dir)
-    sim3NearDupPairsDf(spark, e0, planesFor(corpusSize(spark, dir), minPlanes = 6))
+    sim3NearDupPairsDf(e0, planesFor(corpusSize(spark, dir), minPlanes = 6))
   }
 
   /** Same near-dup pipeline with an explicit plane count (unit-testable). */
-  def sim3NearDupPairsDf(spark: SparkSession, embeddings: DataFrame,
+  def sim3NearDupPairsDf(embeddings: DataFrame,
                          nPlanes: Int): DataFrame = {
     val planes = hyperplanes(nPlanes, 64)
     val e = embeddings
@@ -1370,7 +1370,7 @@ object Similarity {
     * the oracle would agree, hiding it). Shuffle volume is N·|Q| narrow
     * rows; for |Q| beyond a workload's worth of queries the IVF path
     * (sim4) is the right tool instead. */
-  def knnJoinDf(spark: SparkSession, embeddings: DataFrame,
+  def knnJoinDf(embeddings: DataFrame,
                 queries: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
@@ -1398,7 +1398,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val queries = e.filter(col("vec_id") % 97 === 0)
       .orderBy(col("vec_id")).limit(32)
-    knnJoinDf(spark, e, queries, k = 3)
+    knnJoinDf(e, queries, k = 3)
   }
 
   /** Radius (range) similarity search: ALL neighbors within cosine ≥
@@ -1413,7 +1413,7 @@ object Similarity {
     * comparing (the t6 device) so a libm ulp cannot flip a row across
     * the tau boundary between engines; NaN cosines drop for the sim6
     * reason. */
-  def radiusJoinDf(spark: SparkSession, embeddings: DataFrame,
+  def radiusJoinDf(embeddings: DataFrame,
                    queries: DataFrame, tau: Double): DataFrame = {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
     val q = queries.select(col("vec_id").as("q_id"),
@@ -1434,7 +1434,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val queries = e.filter(col("vec_id") % 97 === 0)
       .orderBy(col("vec_id")).limit(32)
-    radiusJoinDf(spark, e, queries, tau = 0.3)
+    radiusJoinDf(e, queries, tau = 0.3)
   }
 
   /** SIM9 — embedding-norm QC report: per label, the count / rounded
@@ -1520,7 +1520,7 @@ object Similarity {
       val qs = e.filter(col("vec_id") % 97 === 0)
         .orderBy(col("vec_id")).limit(nQueries)
       val name = s"knn_truth_${nQueries}_${topK}_" + dirTag(dir)
-      knnJoinDf(spark, e, qs, topK)
+      knnJoinDf(e, qs, topK)
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint(true).createOrReplaceTempView(name)
       name
@@ -2345,7 +2345,7 @@ object Similarity {
     * are never read. The table is a broadcast literal (m×k doubles);
     * approximate cosine = 1 − adc/2 is rounded BEFORE ranking with a
     * vec_id tie-break (the t6/sim6 device). */
-  def pqQuery(spark: SparkSession, index: PqIndex, q: Array[Double],
+  def pqQuery(index: PqIndex, q: Array[Double],
               topK: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
     val m = index.codebooks.length
     val dsub = index.codebooks.head.head.length
@@ -2406,11 +2406,11 @@ object Similarity {
     * exact pass touches pool×topK vectors instead of N, which is the
     * scale contract. The candidate id set is tiny and broadcasts into
     * a semi-join against the embedding table. */
-  def pqQueryReranked(spark: SparkSession, embeddings: DataFrame,
+  def pqQueryReranked(embeddings: DataFrame,
                       index: PqIndex, q: Array[Double], topK: Int = 10,
                       pool: Int = 8,
                       excludeVecId: Option[Long] = None): DataFrame = {
-    val cand = pqQuery(spark, index, q, topK * pool, excludeVecId)
+    val cand = pqQuery(index, q, topK * pool, excludeVecId)
       .select(col("vec_id"))
     val qn = l2unit(q)
     val qLit = array(qn.toIndexedSeq.map(lit): _*)
@@ -2435,7 +2435,7 @@ object Similarity {
     if (qRows.isEmpty)
       return index.codes.select(col("vec_id"),
         lit(0.0).as("cos_sim")).limit(0)
-    pqQueryReranked(spark, emb, index,
+    pqQueryReranked(emb, index,
       qRows.head.getSeq[Double](0).toArray, topK,
       excludeVecId = Some(queryVecId))
   }
@@ -2584,7 +2584,7 @@ object Similarity {
     * probed-cell-count CASE — all literals, fully codegen. Unit
     * vectors: ‖q−x‖² = 2−2cos ⟹ approx cos = 1 − d²/2, rounded before
     * ranking with the vec_id tie-break (the sim7 device). */
-  def ivfPqQuery(spark: SparkSession, index: IvfPqIndex, q: Array[Double],
+  def ivfPqQuery(index: IvfPqIndex, q: Array[Double],
                  nProbe: Int, topK: Int = 10,
                  excludeVecId: Option[Long] = None): DataFrame = {
     val m = index.codebooks.length
@@ -2657,7 +2657,7 @@ object Similarity {
       return index.codes.select(col("vec_id"),
         lit(0.0).as("cos_sim")).limit(0)
     val q = qRows.head.getSeq[Double](0).toArray
-    val cand = ivfPqQuery(spark, index, q, nProbe, topK * pool,
+    val cand = ivfPqQuery(index, q, nProbe, topK * pool,
       excludeVecId = Some(queryVecId)).select(col("vec_id"))
     val qLit = array(l2unit(q).toIndexedSeq.map(lit): _*)
     emb.join(broadcast(cand), Seq("vec_id"), "left_semi")
@@ -2865,7 +2865,7 @@ object Similarity {
     * original vectors, true cosine, top-k; candidates are approximate,
     * the SERVED scores are exact. Pool ≥ corpus degenerates to brute
     * force (pinned — the sim11 nProbe=k discipline). */
-  def binaryAnn(spark: SparkSession, emb: DataFrame, queryVecId: Long,
+  def binaryAnn(emb: DataFrame, queryVecId: Long,
                 topK: Int = 10, pool: Int = 8): DataFrame = {
     val sigs = emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"), signBits("embedding").as("sig"))
@@ -2892,7 +2892,7 @@ object Similarity {
   }
 
   def sim15BinaryAnn(spark: SparkSession, dir: String): DataFrame =
-    binaryAnn(spark, Tables.embeddings(spark, dir), queryVecId = 0L)
+    binaryAnn(Tables.embeddings(spark, dir), queryVecId = 0L)
 
   /** SIM21 — int8 asymmetric ANN + exact rerank: the serving leg of
     * sim12's quantization QC (sim12 grades whether int8 preserves the
@@ -2947,7 +2947,7 @@ object Similarity {
     spark.table(view)
   }
 
-  def int8Ann(spark: SparkSession, emb: DataFrame, queryVecId: Long,
+  def int8Ann(emb: DataFrame, queryVecId: Long,
               topK: Int = 10, pool: Int = 8): DataFrame =
     int8AnnFromCodes(emb, int8Codes(emb), queryVecId, topK, pool)
 
@@ -3011,10 +3011,10 @@ object Similarity {
     * so both engines rank identically; RRF sums unit fractions of
     * small integers, rounds(6). */
   def sim22HybridRrf(spark: SparkSession, dir: String): DataFrame =
-    hybridRrf(spark, Tables.documents(spark, dir),
+    hybridRrf(Tables.documents(spark, dir),
       Tables.embeddings(spark, dir), queryVecId = 0L)
 
-  def hybridRrf(spark: SparkSession, docs: DataFrame, emb: DataFrame,
+  def hybridRrf(docs: DataFrame, emb: DataFrame,
                 queryVecId: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wLex = Window.orderBy(col("bm25").desc, col("doc_id"))

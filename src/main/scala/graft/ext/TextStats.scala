@@ -608,7 +608,7 @@ object TextStats {
     val perDoc = docs
       .withColumn("w", split(lower(coalesce(col("text"), lit(""))), " "))
       .withColumn("dl", size(col("w")))
-    val withTf = terms.zipWithIndex.foldLeft(perDoc) { case (df, (t, i)) =>
+    val withTf = terms.foldLeft(perDoc) { (df, t) =>
       df.withColumn(s"tf_$t", size(filter(col("w"), x => x === lit(t))))
     }.drop("w")
     val aggCols = count(lit(1)).as("n_docs") +:

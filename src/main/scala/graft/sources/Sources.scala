@@ -154,7 +154,7 @@ object Sources {
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         res.schema)
     } finally {
-      import java.nio.file.{Files, Paths, Path}
+      import java.nio.file.{Files, Paths}
       val root = Paths.get(tmp)
       if (Files.exists(root)) {
         import scala.jdk.CollectionConverters._

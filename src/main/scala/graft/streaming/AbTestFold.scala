@@ -15,37 +15,23 @@ import org.apache.spark.sql.functions._
   * (max doesn't care when conversions arrive, so no carry row is
   * needed — the simplest shape in the fold family).
   *
-  * State is USER-sized and lives as a distributed frame (the
-  * TransitionFold discipline), eagerly checkpointed per fold. Max is
-  * idempotent, but the state-merge still rides [[onBatch]]'s batchId
-  * guard for uniformity (a replay is a content no-op either way).
-  * Restart = [[rebuildFrom]] over the landed corpus.
+  * State is USER-sized, a [[FrameState]]. Max is idempotent, but the
+  * state-merge still rides [[onBatch]]'s batchId guard for uniformity
+  * (a replay is a content no-op either way). Restart = [[rebuildFrom]]
+  * over the landed corpus.
   */
 class AbTestStreamFold extends StreamFold {
 
-  private var users: Option[DataFrame] = None
+  private val users = new FrameState("user_id BIGINT, converted BIGINT")(
+    _.groupBy(col("user_id")).agg(max(col("converted")).as("converted")))
 
   /** Fold one micro-batch of raw events (user_id, event_type, ...). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partials = graft.etl.Analyze.userConversions(batch)
-    val merged = synchronized(users) match {
-      case Some(u) => u.unionByName(partials)
-        .groupBy(col("user_id"))
-        .agg(max(col("converted")).as("converted"))
-      case None => partials
-    }
-    val ck = merged.localCheckpoint(true)
-    synchronized { users = Some(ck) }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    users.fold(graft.etl.Analyze.userConversions(batch))
 
   /** The a27-shaped experiment card over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = synchronized(users) match {
-    case Some(u) => graft.etl.Analyze.abTestFromUsers(u)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.abTestFromUsers(
-        Seq.empty[(Long, Long)].toDF("user_id", "converted"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.abTestFromUsers(users.frame(spark))
 
-  protected def reset(): Unit = users = None
+  protected def reset(): Unit = users.clear()
 }

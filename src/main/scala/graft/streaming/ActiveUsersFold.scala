@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A22's streaming twin — the fold tier's fifth leg, ACTIVE-USER
@@ -12,11 +12,9 @@ import org.apache.spark.sql.functions._
   * streaming state shape, which is why this twin needs no new serving
   * math at all.
   *
-  * State is a DataFrame, not a driver structure: the pair frame lives
-  * distributed (eager `localCheckpoint` per fold truncates the
-  * accumulated-union lineage, the g1 fixpoint discipline), bounded by
-  * |users| × |days| whatever the event volume — a 100 TB/day stream
-  * folds to the same frame size as a trickle with the same population.
+  * State is a [[FrameState]], bounded by |users| × |days| whatever the
+  * event volume — a 100 TB/day stream folds to the same frame size as
+  * a trickle with the same population.
   * Set semantics make the fold IDEMPOTENT (union+distinct of a replayed
   * micro-batch is a content no-op), so unlike the additive
   * [[QuantileStreamFold]] it does not rely on the batchId replay guard.
@@ -30,31 +28,20 @@ import org.apache.spark.sql.functions._
   */
 class ActiveUsersStreamFold extends StreamFold {
 
-  private var pairs: Option[DataFrame] = None
+  private val pairs = new FrameState("d DATE, user_id BIGINT")(_.distinct())
 
   /** Fold one micro-batch of raw events (ts, user_id, ...): batch-local
     * distributed dedup, then set-merge into the accumulated frame. */
-  def foldBatch(batch: DataFrame): Unit = {
-    val p = batch
-      .select(to_date(col("ts")).as("d"), col("user_id"))
-      .distinct()
-    synchronized {
-      val merged = pairs.fold(p)(_.unionByName(p)).distinct()
-        .localCheckpoint(true)
-      pairs = Some(merged)
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit = pairs.fold(
+    batch.select(to_date(col("ts")).as("d"), col("user_id")).distinct())
 
   /** DAU/WAU/stickiness over everything the stream has carried — the
     * a22 serve, through the SAME kernel as the batch query. */
-  def serve(): DataFrame = synchronized {
-    val du = pairs.getOrElse(
-      throw new IllegalStateException("no batches folded yet"))
-    graft.etl.Analyze.activeUsersFromPairs(du)
-  }
+  def serve(): DataFrame =
+    graft.etl.Analyze.activeUsersFromPairs(pairs.frame(SparkSession.active))
 
   /** The accumulated (d, user_id) state frame — exposed for specs. */
-  def stateFrame: Option[DataFrame] = synchronized(pairs)
+  def stateFrame: Option[DataFrame] = pairs.current
 
-  protected def reset(): Unit = pairs = None
+  protected def reset(): Unit = pairs.clear()
 }

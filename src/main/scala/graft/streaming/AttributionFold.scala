@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * non-purchase by construction, so no purchase is ever double-credited.
   *
   * State splits by size class (the TransitionFold discipline): the
-  * channel census (≤|types| cells of additive (n, cents)) is a driver
-  * map; the per-user last-touch carry is USER-sized and lives as a
-  * distributed frame, eagerly checkpointed per fold. Serve replays
+  * channel census (≤|types| cells of additive (n, cents)) is
+  * [[KeyedSums]]; the per-user last-touch carry is USER-sized, a
+  * distributed frame that each batch replaces. Serve replays
   * [[graft.etl.Analyze.attributionReport]] over the folded census —
   * the share denominator recomputes from the merged counts, so stream
   * ≡ batch parity is exact. Ordering contract: per-user (ts, event_id)
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
 class AttributionStreamFold extends StreamFold {
 
   private val census =
-    scala.collection.mutable.Map.empty[String, (Long, Long)]
+    new KeyedSums("channel STRING, n_purchases BIGINT, cents BIGINT", keys = 1)
   private var lastTouch: Option[DataFrame] = None
 
   /** Fold one micro-batch of raw events
@@ -44,8 +44,8 @@ class AttributionStreamFold extends StreamFold {
       case None => b
     }
     val allCk = all.localCheckpoint(true) // credits + carry both read it
-    val credits = graft.etl.Analyze.attributionCensus(
-      graft.etl.Analyze.attributionCredits(allCk)).collect()
+    census.add(graft.etl.Analyze.attributionCensus(
+      graft.etl.Analyze.attributionCredits(allCk)))
     // roll the carry: latest non-purchase event per user of carry ∪ batch
     val touches = allCk.filter(col("event_type") =!= "purchase")
       .groupBy(col("user_id"))
@@ -55,24 +55,12 @@ class AttributionStreamFold extends StreamFold {
         col("user_id"), col("s.event_type").as("event_type"),
         col("s.value").as("value"))
       .localCheckpoint(true)
-    synchronized {
-      credits.foreach { r =>
-        val k = r.getString(0)
-        val (n0, c0) = census.getOrElse(k, (0L, 0L))
-        census(k) = (n0 + r.getLong(1), c0 + r.getLong(2))
-      }
-      lastTouch = Some(touches)
-    }
+    synchronized { lastTouch = Some(touches) }
   }
 
   /** The a30-shaped report over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val rows = synchronized {
-      census.toSeq.map { case (ch, (n, c)) => (ch, n, c) }
-    }.toDF("channel", "n_purchases", "cents")
-    graft.etl.Analyze.attributionReport(rows)
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.attributionReport(census.frame(spark))
 
   protected def reset(): Unit = { census.clear(); lastTouch = None }
 }

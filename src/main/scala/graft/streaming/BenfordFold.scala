@@ -18,25 +18,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the landed corpus (one batch-kernel pass). */
 class BenfordFold extends StreamFold {
 
-  private var counts: Map[Int, Long] = Map.empty
+  private val counts = new KeyedSums("digit INT, n BIGINT", keys = 1)
 
   /** Fold one micro-batch of raw events (event_type, value). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partial = graft.etl.Analyze.benfordDigitCounts(batch)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)) // ≤ 9 rows
-    synchronized {
-      counts = partial.foldLeft(counts) { case (m, (d, n)) =>
-        m.updated(d, m.getOrElse(d, 0L) + n)
-      }
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    counts.add(graft.etl.Analyze.benfordDigitCounts(batch)) // ≤ 9 rows
 
   /** The a41-shaped Benford card over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    graft.etl.Analyze.benfordFromCounts(
-      synchronized(counts).toSeq.toDF("digit", "n"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.benfordFromCounts(counts.frame(spark))
 
-  protected def reset(): Unit = counts = Map.empty
+  protected def reset(): Unit = counts.clear()
 }

@@ -49,10 +49,21 @@ class BloomStreamDedup(expectedItems: Long, fpp: Double) extends Serializable {
   /** Fold one micro-batch: return the (materialized) survivors whose
     * `key` column has never been seen — batch-locally exact,
     * cross-batch Bloom-approximate — and absorb their fingerprints into
-    * the running filter. The foreachBatch body, also directly
-    * unit-testable on static frames. Returns a frame, never collected
-    * rows: survivors flow to a distributed sink, not the driver. */
+    * the running filter. Directly unit-testable on static frames.
+    * Returns a frame, never collected rows: survivors flow to a
+    * distributed sink, not the driver. */
   def foldBatch(batch: DataFrame, key: String): DataFrame = {
+    val (fresh, batchFilter) = survivors(batch, key)
+    absorb(batchFilter)
+    fresh
+  }
+
+  private def absorb(batchFilter: BloomFilter): Unit =
+    synchronized { filter.mergeInPlace(batchFilter) }
+
+  /** The survivors of a batch and the filter of their keys, without
+    * absorbing it: the caller merges it once the survivors are safe. */
+  private def survivors(batch: DataFrame, key: String): (DataFrame, BloomFilter) = {
     val f = synchronized(filter)
     val bytes = graft.functions.BloomProbe.serialize(f)
     val neverSeen =
@@ -61,10 +72,7 @@ class BloomStreamDedup(expectedItems: Long, fpp: Double) extends Serializable {
     // build + sink) and must be decided against ONE filter snapshot.
     val fresh = batch.dropDuplicates(key).filter(neverSeen)
       .localCheckpoint(true)
-    val batchFilter =
-      graft.functions.BloomProbe.buildHashed(fresh, key, expectedItems, fpp)
-    synchronized { filter.mergeInPlace(batchFilter) }
-    fresh
+    (fresh, graft.functions.BloomProbe.buildHashed(fresh, key, expectedItems, fpp))
   }
 
   /** Current membership probe — exposed for specs and serving; keyed
@@ -80,13 +88,17 @@ class BloomStreamDedup(expectedItems: Long, fpp: Double) extends Serializable {
 
   /** Wire a streaming frame into the fold, landing survivors via the
     * supplied sink callback (typically a parquet append — the S5
-    * micro-batch sink discipline). */
+    * micro-batch sink discipline). A batch's keys join the filter only
+    * after `sink` returns: if it throws, the re-delivered batch is
+    * still unseen and lands on the retry. */
   def start(docs: DataFrame, key: String, checkpoint: String)
            (sink: DataFrame => Unit): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(foldBatch(batch.toDF(), key))
+        val (fresh, batchFilter) = survivors(batch.toDF(), key)
+        sink(fresh)
+        absorb(batchFilter)
       }
       .start()
 }

@@ -24,36 +24,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * would not error either, it would silently narrow the served CI. */
 class BootstrapFold extends StreamFold {
 
-  private var reps: Map[(String, Int), (Long, Long)] = Map.empty
-  private var raw: Map[String, (Long, Long)] = Map.empty
+  private val reps = new KeyedSums(
+    "event_type STRING, b INT, wc BIGINT, wn BIGINT", keys = 2) // |types|·B rows
+  private val raw =
+    new KeyedSums("event_type STRING, n_events BIGINT, sc BIGINT", keys = 1)
 
   /** Fold one micro-batch of raw events (event_type, event_id, value). */
   def foldBatch(batch: DataFrame): Unit = {
-    val pr = graft.etl.Analyze.bootstrapReplicaSums(batch)
-      .collect().map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3))) // |types|·B rows
-    val pw = graft.etl.Analyze.bootstrapRawSums(batch)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-    synchronized {
-      reps = pr.foldLeft(reps) { case (m, (k, (wc, wn))) =>
-        val (a, b) = m.getOrElse(k, (0L, 0L)); m.updated(k, (a + wc, b + wn))
-      }
-      raw = pw.foldLeft(raw) { case (m, (k, (n, sc))) =>
-        val (a, b) = m.getOrElse(k, (0L, 0L)); m.updated(k, (a + n, b + sc))
-      }
-    }
+    reps.add(graft.etl.Analyze.bootstrapReplicaSums(batch))
+    raw.add(graft.etl.Analyze.bootstrapRawSums(batch))
   }
 
   /** The a43-shaped CI card over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val (r, w) = synchronized((reps, raw))
-    graft.etl.Analyze.bootstrapCiFromSums(
-      r.toSeq.map { case ((t, b), (wc, wn)) => (t, b, wc, wn) }
-        .toDF("event_type", "b", "wc", "wn"),
-      w.toSeq.map { case (t, (n, sc)) => (t, n, sc) }
-        .toDF("event_type", "n_events", "sc"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.bootstrapCiFromSums(reps.frame(spark), raw.frame(spark))
 
-  protected def reset(): Unit = { reps = Map.empty; raw = Map.empty }
+  protected def reset(): Unit = { reps.clear(); raw.clear() }
 }

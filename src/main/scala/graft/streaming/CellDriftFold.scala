@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class CellDriftFold(refCounts: Map[Int, Long], k: Int)
     extends StreamFold {
 
-  private var counts: Map[Int, Long] = Map.empty
-  private var badCells = 0L
+  // cell -1 holds the rows outside [0, k); the fixed-domain join of
+  // serve drops it from the totals
+  private val counts = new KeyedSums("cell INT, cc BIGINT", keys = 1)
 
   /** Rows whose `cell` violated the published [0, k) domain (or was
     * null) across every folded batch — counted EXPLICITLY (advisor
@@ -36,7 +37,7 @@ class CellDriftFold(refCounts: Map[Int, Long], k: Int)
     * drop them from the totals, hiding an ingest assignment that no
     * longer matches the served generation — which is itself a
     * retrain-grade alarm, not noise to swallow. */
-  def domainViolations: Long = synchronized(badCells)
+  def domainViolations: Long = counts(-1).head
 
   /** Fold one micro-batch of assigned vectors (… cell …). */
   def foldBatch(batch: DataFrame): Unit = {
@@ -45,18 +46,11 @@ class CellDriftFold(refCounts: Map[Int, Long], k: Int)
     // raw getInt threw on long or null); the domain filter keeps the
     // k-bounded state contract and the violation count is served, not
     // silently shifted out of the totals by the fixed-domain join
-    val partial = batch
+    counts.add(batch // ≤ k+1 rows
       .groupBy(when(col("cell").isNotNull &&
           col("cell") >= 0 && col("cell") < k,
-        col("cell").cast("int")).otherwise(lit(-1)).as("cell"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)) // ≤ k+1 rows
-    synchronized {
-      partial.foreach { case (c, n) =>
-        if (c < 0) badCells += n
-        else counts = counts.updated(c, counts.getOrElse(c, 0L) + n)
-      }
-    }
+        col("cell").cast("int")).otherwise(lit(-1)))
+      .agg(count(lit(1))))
   }
 
   /** The sim28-shaped drift card: frozen reference vs everything
@@ -64,9 +58,8 @@ class CellDriftFold(refCounts: Map[Int, Long], k: Int)
   def serve(spark: SparkSession): DataFrame = {
     import spark.implicits._
     graft.ext.Similarity.cellPsiFromCounts(
-      refCounts.toSeq.toDF("cell", "cr"),
-      synchronized(counts).toSeq.toDF("cell", "cc"), k)
+      refCounts.toSeq.toDF("cell", "cr"), counts.frame(spark), k)
   }
 
-  protected def reset(): Unit = { counts = Map.empty; badCells = 0L }
+  protected def reset(): Unit = counts.clear()
 }

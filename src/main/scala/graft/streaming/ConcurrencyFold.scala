@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** W12's streaming twin — the concurrency curve maintained LIVE over a
@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * State is bounded by DISTINCT ACTIVE SECONDS in the stream's time
   * range (two deltas per span collapse onto the per-second grid), never
   * by span count — a million sessions starting the same second fold to
-  * one row. The frame lives distributed, eager-checkpointed per fold
-  * (the g1 lineage-truncation discipline).
+  * one row. The frame is a [[FrameState]].
   *
   * Addition double-counts on replay, so like [[QuantileStreamFold]]
   * (and unlike the set-semantics [[ActiveUsersStreamFold]]) the
@@ -31,28 +30,18 @@ import org.apache.spark.sql.functions._
   */
 class ConcurrencyStreamFold extends StreamFold {
 
-  private var deltas: Option[DataFrame] = None
+  private val deltas =
+    new FrameState("t BIGINT, net BIGINT, n_starts BIGINT")(_.groupBy(col("t"))
+      .agg(sum(col("net")).as("net"), sum(col("n_starts")).as("n_starts")))
 
   /** Fold one micro-batch of spans: reduce distributed, merge by sum. */
-  def foldBatch(spans: DataFrame): Unit = {
-    val d = graft.ext.WindowFns.spanDeltas(spans)
-    synchronized {
-      val merged = deltas.fold(d)(cur => cur.unionByName(d)
-          .groupBy(col("t"))
-          .agg(sum(col("net")).as("net"),
-            sum(col("n_starts")).as("n_starts")))
-        .localCheckpoint(true)
-      deltas = Some(merged)
-    }
-  }
+  def foldBatch(spans: DataFrame): Unit =
+    deltas.fold(graft.ext.WindowFns.spanDeltas(spans))
 
   /** The per-hour concurrency curve over everything the stream has
     * carried — the w12 serve, through the SAME synthesis kernel. */
-  def serve(): DataFrame = synchronized {
-    val d = deltas.getOrElse(
-      throw new IllegalStateException("no batches folded yet"))
-    graft.ext.WindowFns.curveFromDeltas(d)
-  }
+  def serve(): DataFrame =
+    graft.ext.WindowFns.curveFromDeltas(deltas.frame(SparkSession.active))
 
-  protected def reset(): Unit = deltas = None
+  protected def reset(): Unit = deltas.clear()
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** W17's streaming twin — the live conversion-latency card, closing the
@@ -28,25 +28,19 @@ import org.apache.spark.sql.functions._
   * event history. Set-union state makes the fold IDEMPOTENT — a
   * replayed micro-batch distincts away to a content no-op — so the
   * batchId replay guard is belt-and-braces; restart is
-  * [[rebuildFrom]] over the landed corpus (one distributed pass).
-  * Eager `localCheckpoint` per fold truncates the accumulated-union
-  * lineage (the SurvivalFold discipline). */
+  * [[rebuildFrom]] over the landed corpus (one distributed pass). */
 class ConversionLatencyFold extends StreamFold {
 
-  /** Compacted (user_id, event_type, ts) state — a DataFrame, never a
-    * driver structure. */
-  private var ev: Option[DataFrame] = None
+  /** Compacted (user_id, event_type, ts) state. A batch's partials are
+    * compacted too, so the first batch and a rebuild hold the frontier
+    * only (deadness against a subset implies deadness against the
+    * whole, so compacting twice drops nothing live). */
+  private val ev = new FrameState(
+    "user_id BIGINT, event_type STRING, ts TIMESTAMP")(u => compacted(u.distinct()))
 
-  def foldBatch(batch: DataFrame): Unit = {
-    val rel = batch
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id"), col("event_type"), col("ts"))
-    synchronized {
-      val merged = ev.fold(rel.distinct())(prev =>
-        prev.unionByName(rel).distinct())
-      ev = Some(compacted(merged).localCheckpoint(true))
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit = ev.fold(compacted(batch
+    .filter(col("event_type").isin("view", "click", "purchase"))
+    .select(col("user_id"), col("event_type"), col("ts")).distinct()))
 
   /** Drop rows that can never influence any future serve (the
     * sufficiency rule above), using the batch kernel's OWN stage frame
@@ -65,14 +59,11 @@ class ConversionLatencyFold extends StreamFold {
 
   /** The w17 card over everything folded so far, through the batch
     * query's identical kernel (funnelStages → latency card). */
-  def serve(): DataFrame = synchronized {
-    val e = ev.getOrElse(
-      throw new IllegalStateException("no batches folded yet"))
-    graft.ext.WindowFns.conversionLatency(e)
-  }
+  def serve(): DataFrame =
+    graft.ext.WindowFns.conversionLatency(ev.frame(SparkSession.active))
 
   /** The compacted state frame — exposed for specs (size bounds). */
-  def stateFrame: Option[DataFrame] = synchronized(ev)
+  def stateFrame: Option[DataFrame] = ev.current
 
-  protected def reset(): Unit = ev = None
+  protected def reset(): Unit = ev.clear()
 }

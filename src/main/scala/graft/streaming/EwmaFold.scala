@@ -15,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Per micro-batch: ONE distributed pass
   * ([[graft.ext.WindowFns.hourlyCents]], the same map-side-combined
-  * reduction) collapsed to per-(series, hour) partials; driver state is
-  * bounded by series × ALL OBSERVED hours — the map keeps every
+  * reduction) collapsed to per-(series, hour) partials; the
+  * [[KeyedSums]] state is bounded by series × ALL OBSERVED hours — it
+  * keeps every
   * (series, hour) key ever folded, the same cardinality the batch op's
   * own hourly profile frame has over the full corpus. That is exactly
   * what full-corpus batch parity requires; a long-lived deployment that
@@ -29,29 +30,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class EwmaStreamFold extends StreamFold {
 
-  private val state = scala.collection.mutable.Map.empty[(String, Long), Long]
+  private val hourly =
+    new KeyedSums("event_type STRING, hour_idx BIGINT, cents BIGINT", keys = 2)
 
   /** Fold one micro-batch of raw events (ts, event_type, value, ...). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partials = graft.ext.WindowFns.hourlyCents(batch).collect()
-    synchronized {
-      partials.foreach { r =>
-        val k = (r.getString(0), r.getLong(1))
-        state(k) = state.getOrElse(k, 0L) + r.getLong(2)
-      }
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    hourly.add(graft.ext.WindowFns.hourlyCents(batch))
 
   /** The w15-shaped report over everything folded so far: the folded
     * hourly state re-enters the BATCH kernel, so every weight, round,
     * and gap-renormalization rule is the batch op's own. */
-  def serve(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val hourly = synchronized {
-      state.toSeq.map { case ((t, h), c) => (t, h, c) }
-    }.toDF("event_type", "hour_idx", "cents")
-    graft.ext.WindowFns.ewmaFromHourly(hourly)
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.ext.WindowFns.ewmaFromHourly(hourly.frame(spark))
 
-  protected def reset(): Unit = state.clear()
+  protected def reset(): Unit = hourly.clear()
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ext.TextStats
@@ -49,7 +50,7 @@ class HashedLmFold(uniBuckets: Int = TextStats.T24UniBuckets,
     * scorer expression carries a snapshot (clone) of the tables, so a
     * later batch cannot change an earlier, still-unexecuted served
     * frame. */
-  def serve(spark: SparkSession, docs: DataFrame): DataFrame =
+  def serve(@unused spark: SparkSession, docs: DataFrame): DataFrame =
     synchronized { TextStats.hashedLmReport(docs, uniC.clone(), biC.clone()) }
 
   protected def reset(): Unit = {

@@ -16,48 +16,28 @@ import org.apache.spark.sql.functions._
   * batch query runs — over the folded frame, so stream ≡ batch parity
   * is exact by construction at every point in the stream.
   *
-  * State is USER-sized and lives as a distributed frame (the
-  * AbTestStreamFold discipline), eagerly checkpointed per fold.
-  * Unlike a27's max, SUM is NOT idempotent — the [[onBatch]] batchId
+  * State is USER-sized, a [[FrameState]]. Unlike a27's max, SUM is NOT idempotent — the [[onBatch]] batchId
   * guard is load-bearing here: a re-delivered batch would double a
   * user's revenue where it could not re-flip a converted bit.
   * Restart = [[rebuildFrom]] over the landed corpus. */
 class MannWhitneyFold extends StreamFold {
 
-  private var users: Option[DataFrame] = None
+  private val users = new FrameState("user_id BIGINT, cents BIGINT")(
+    _.groupBy(col("user_id")).agg(sum(col("cents")).as("cents")))
 
   /** Fold one micro-batch of raw events (user_id, event_type, value). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partials = graft.etl.Analyze.userValueCents(batch)
-    val merged = synchronized(users) match {
-      case Some(u) => u.unionByName(partials)
-        .groupBy(col("user_id"))
-        .agg(sum(col("cents")).as("cents"))
-      case None => partials
-    }
-    val ck = merged.localCheckpoint(true)
-    synchronized { users = Some(ck) }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    users.fold(graft.etl.Analyze.userValueCents(batch))
 
   /** The a33-shaped rank-sum card over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = synchronized(users) match {
-    case Some(u) => graft.etl.Analyze.mannWhitneyFromUsers(u)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.mannWhitneyFromUsers(
-        Seq.empty[(Long, Long)].toDF("user_id", "cents"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.mannWhitneyFromUsers(users.frame(spark))
 
   /** The a34-shaped KS card over the SAME folded state — one per-user
     * cents reduction serves both live experiment readouts (rank-sum
     * for location, ECDF gap for any distribution change). */
-  def serveKs(spark: SparkSession): DataFrame = synchronized(users) match {
-    case Some(u) => graft.etl.Analyze.ksTestFromUsers(u)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.ksTestFromUsers(
-        Seq.empty[(Long, Long)].toDF("user_id", "cents"))
-  }
+  def serveKs(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.ksTestFromUsers(users.frame(spark))
 
-  protected def reset(): Unit = users = None
+  protected def reset(): Unit = users.clear()
 }

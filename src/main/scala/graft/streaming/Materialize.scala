@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** T8 — the refresh/materialization surface: the reference dashboard
@@ -43,7 +43,7 @@ object Materialize {
   * cached snapshot and transparently reloads when older than `ttlMs`;
   * `refresh()` is the manual button. The snapshot is also registered as
   * temp view `name` so SQL/dashboards can `spark.table(name)` it. */
-final class Snapshot(spark: SparkSession, name: String, ttlMs: Long,
+final class Snapshot(name: String, ttlMs: Long,
                      load: () => DataFrame) {
   private var current: Option[DataFrame] = None
   private var loadedAt = Long.MinValue

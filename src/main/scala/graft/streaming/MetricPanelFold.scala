@@ -16,47 +16,28 @@ import org.apache.spark.sql.functions._
   * metric's sig_bh (the family threshold moves with every p) — the
   * cross-metric coupling a per-metric fold could not express.
   *
-  * State is (users × metrics)-sized and lives as a distributed frame
-  * (the AbTestStreamFold discipline), eagerly checkpointed per fold.
-  * SUM is not idempotent — the [[onBatch]] batchId guard is
+  * State is (users × metrics)-sized, a [[FrameState]]. SUM is not idempotent — the [[onBatch]] batchId guard is
   * correctness. Restart = [[rebuildFrom]] over the landed corpus. */
 class MetricPanelFold extends StreamFold {
 
-  private var counts: Option[DataFrame] = None
+  private val counts =
+    new FrameState("user_id BIGINT, event_type STRING, c BIGINT")(
+      _.groupBy(col("user_id"), col("event_type")).agg(sum(col("c")).as("c")))
 
   /** Fold one micro-batch of raw events (user_id, event_type). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partials = graft.etl.Analyze.userMetricCounts(batch)
-    val merged = synchronized(counts) match {
-      case Some(u) => u.unionByName(partials)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(sum(col("c")).as("c"))
-      case None => partials
-    }
-    val ck = merged.localCheckpoint(true)
-    synchronized { counts = Some(ck) }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    counts.fold(graft.etl.Analyze.userMetricCounts(batch))
 
   /** The a36-shaped BH panel over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = synchronized(counts) match {
-    case Some(u) => graft.etl.Analyze.bhPanelFromCounts(u)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.bhPanelFromCounts(Seq.empty[(Long, String, Long)]
-        .toDF("user_id", "event_type", "c"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.bhPanelFromCounts(counts.frame(spark))
 
   /** The a37-shaped power/MDE card over the SAME folded state — one
     * per-(user, metric) count reduction serves both live readouts
     * (verdicts AND the power to believe them; the a33/a34
     * shared-state pattern). */
-  def serveMde(spark: SparkSession): DataFrame = synchronized(counts) match {
-    case Some(u) => graft.etl.Analyze.powerMdeFromCounts(u)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.powerMdeFromCounts(Seq.empty[(Long, String, Long)]
-        .toDF("user_id", "event_type", "c"))
-  }
+  def serveMde(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.powerMdeFromCounts(counts.frame(spark))
 
-  protected def reset(): Unit = counts = None
+  protected def reset(): Unit = counts.clear()
 }

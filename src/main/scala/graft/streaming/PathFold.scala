@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * across batches, and the ONE shape from which both report numbers
   * recompute exactly (n_paths = Σ n, n_users = row count per path).
   * Both state pieces are potentially user-sized, so both live as
-  * DISTRIBUTED frames (the TransitionFold discipline), eagerly
-  * checkpointed per fold: the (path, user) frame is bounded by users ×
-  * distinct-paths-per-user (the same bound the batch shuffle has), the
-  * carry by 2 rows per user. Serve replays
+  * distributed frames: the (path, user) [[FrameState]] is bounded by
+  * users × distinct-paths-per-user (the same bound the batch shuffle
+  * has); the carry, 2 rows per user, is replaced by each batch. Serve replays
   * [[graft.etl.Analyze.pathReport]] over the folded frame. Ordering
   * contract: event_id monotone per user across batches (the a25'/w13'
   * statement). [[onBatch]] drops foreachBatch retries; restart =
@@ -29,7 +28,10 @@ import org.apache.spark.sql.functions._
   */
 class PathStreamFold extends StreamFold {
 
-  private var pairs: Option[DataFrame] = None
+  private val pairs = new FrameState(
+    "step1 STRING, step2 STRING, step3 STRING, user_id BIGINT, n BIGINT")(
+    _.groupBy(col("step1"), col("step2"), col("step3"), col("user_id"))
+      .agg(sum(col("n")).as("n")))
   private var carry2: Option[DataFrame] = None
 
   /** Fold one micro-batch of raw events (event_id, user_id,
@@ -42,35 +44,20 @@ class PathStreamFold extends StreamFold {
       case None => b
     }
     val allCk = all.localCheckpoint(true) // triples + next carry read it
-    val newPairs = graft.etl.Analyze.pathUserCounts(
-      graft.etl.Analyze.pathTriples(allCk))
-    val merged = synchronized(pairs) match {
-      case Some(p) => p.unionByName(newPairs)
-        .groupBy(col("step1"), col("step2"), col("step3"), col("user_id"))
-        .agg(sum(col("n")).as("n"))
-      case None => newPairs
-    }
-    val mergedCk = merged.localCheckpoint(true)
+    pairs.fold(graft.etl.Analyze.pathUserCounts(
+      graft.etl.Analyze.pathTriples(allCk)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("event_id").desc)
     val nextCarry = allCk
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 2).drop("rn")
       .localCheckpoint(true)
-    synchronized {
-      pairs = Some(mergedCk)
-      carry2 = Some(nextCarry)
-    }
+    synchronized { carry2 = Some(nextCarry) }
   }
 
   /** The a31-shaped report over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = synchronized(pairs) match {
-    case Some(p) => graft.etl.Analyze.pathReport(p)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.pathReport(Seq.empty[(String, String, String, Long, Long)]
-        .toDF("step1", "step2", "step3", "user_id", "n"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.pathReport(pairs.frame(spark))
 
-  protected def reset(): Unit = { pairs = None; carry2 = None }
+  protected def reset(): Unit = { pairs.clear(); carry2 = None }
 }

@@ -17,40 +17,26 @@ import org.apache.spark.sql.functions._
   * no wall clock anywhere.
   *
   * Stream ≡ batch parity is exact and order-immune (all three
-  * components ignore arrival order). State is USER-sized, distributed,
-  * checkpointed per fold (the TransitionFold discipline). freq/cents
+  * components ignore arrival order). State is USER-sized, a
+  * [[FrameState]]. freq/cents
   * are ADDITIVE ⇒ [[onBatch]] carries the batchId and drops
   * foreachBatch retries; restart = [[rebuildFrom]].
   */
 class RfmStreamFold extends StreamFold {
 
-  private var users: Option[DataFrame] = None
+  private val users = new FrameState(
+    "user_id BIGINT, last_day BIGINT, freq BIGINT, cents BIGINT")(
+    _.groupBy(col("user_id")).agg(max(col("last_day")).as("last_day"),
+      sum(col("freq")).as("freq"), sum(col("cents")).as("cents")))
 
   /** Fold one micro-batch of raw events (ts, user_id, event_type,
     * value, ...). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partials = graft.etl.Analyze.rfmPerUser(batch)
-    val merged = synchronized(users) match {
-      case Some(u) => u.unionByName(partials)
-        .groupBy(col("user_id"))
-        .agg(max(col("last_day")).as("last_day"),
-          sum(col("freq")).as("freq"),
-          sum(col("cents")).as("cents"))
-      case None => partials
-    }
-    val ck = merged.localCheckpoint(true)
-    synchronized { users = Some(ck) }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    users.fold(graft.etl.Analyze.rfmPerUser(batch))
 
   /** The a28-shaped segment census over everything folded so far. */
-  def serve(spark: SparkSession): DataFrame = synchronized(users) match {
-    case Some(u) => graft.etl.Analyze.rfmFromUsers(u)
-    case None =>
-      import spark.implicits._
-      graft.etl.Analyze.rfmFromUsers(
-        Seq.empty[(Long, Long, Long, Long)]
-          .toDF("user_id", "last_day", "freq", "cents"))
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.rfmFromUsers(users.frame(spark))
 
-  protected def reset(): Unit = users = None
+  protected def reset(): Unit = users.clear()
 }

@@ -17,38 +17,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over the folded state, so stream ≡ batch parity is exact by
   * construction (the w15'/a26' shared-kernel discipline).
   *
-  * Driver state is series × observed hours of two longs. Addition is a
+  * The [[KeyedSums]] state is series × observed hours of two longs. Addition is a
   * monoid ⇒ [[onBatch]] carries the batchId and drops foreachBatch
   * retries; restart = [[rebuildFrom]] over the landed corpus, exact by
   * additivity.
   */
 class RollingCorrStreamFold extends StreamFold {
 
-  // (series, hour) -> (Σ v4, n)
-  private val state =
-    scala.collection.mutable.Map.empty[(String, Long), (Long, Long)]
+  private val hourly = new KeyedSums(
+    "event_type STRING, hour_idx BIGINT, v4sum BIGINT, n BIGINT", keys = 2)
 
   /** Fold one micro-batch of raw events (ts, event_type, value, ...). */
-  def foldBatch(batch: DataFrame): Unit = {
-    val partials = graft.ext.WindowFns.hourlyMeanPartials(batch).collect()
-    synchronized {
-      partials.foreach { r =>
-        val k = (r.getString(0), r.getLong(1))
-        val (s0, n0) = state.getOrElse(k, (0L, 0L))
-        state(k) = (s0 + r.getLong(2), n0 + r.getLong(3))
-      }
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    hourly.add(graft.ext.WindowFns.hourlyMeanPartials(batch))
 
   /** The w14-shaped report over everything folded so far, through the
     * byte-identical batch kernel (means, windows, Pearson, rounding). */
-  def serve(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val hourly = synchronized {
-      state.toSeq.map { case ((t, h), (s, n)) => (t, h, s, n) }
-    }.toDF("event_type", "hour_idx", "v4sum", "n")
-    graft.ext.WindowFns.rollingCorrFromHourly(hourly)
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.ext.WindowFns.rollingCorrFromHourly(hourly.frame(spark))
 
-  protected def reset(): Unit = state.clear()
+  protected def reset(): Unit = hourly.clear()
 }

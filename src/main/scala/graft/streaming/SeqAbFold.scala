@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A32's streaming twin — the live sequential-experiment monitor, which
@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   * deltas, cumulative card, z, boundary, both verdicts, all the batch
   * op's own, so parity is exact by construction.
   *
-  * State is a DataFrame, not a driver structure (the ActiveUsersFold
-  * discipline): users-bounded whatever the event volume, eager
-  * `localCheckpoint` per fold truncates the accumulated-union lineage.
+  * State is a [[FrameState]], users-bounded whatever the event volume.
   * Min-merges make the fold IDEMPOTENT — a replayed micro-batch is a
   * content no-op — even without the batchId replay guard. Restart is
   * [[rebuildFrom]] over the landed corpus: one distributed reduction,
@@ -38,43 +36,30 @@ import org.apache.spark.sql.functions._
   * serve's counts. */
 class SeqAbStreamFold extends StreamFold {
 
-  private var journeys: Option[DataFrame] = None
+  private val journeys =
+    new FrameState("user_id BIGINT, enroll_day BIGINT, conv_day BIGINT")(
+      _.groupBy(col("user_id")).agg(min(col("enroll_day")).as("enroll_day"),
+        min(col("conv_day")).as("conv_day")))
 
   /** Fold one micro-batch of raw events: batch-local distributed
     * reduction, then monoid-merge into the state frame. */
-  def foldBatch(batch: DataFrame): Unit = {
-    val p = graft.etl.Analyze.userJourneys(batch)
-    synchronized {
-      val merged = journeys.fold(p) { prev =>
-        prev.unionByName(p)
-          .groupBy(col("user_id")).agg(
-            min(col("enroll_day")).as("enroll_day"),
-            min(col("conv_day")).as("conv_day"))
-      }.localCheckpoint(true)
-      journeys = Some(merged)
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    journeys.fold(graft.etl.Analyze.userJourneys(batch))
 
   /** The a32 card over everything folded so far, through the SAME
     * kernel as the batch query. */
-  def serve(): DataFrame = synchronized {
-    val j = journeys.getOrElse(
-      throw new IllegalStateException("no batches folded yet"))
-    graft.etl.Analyze.sequentialAbFromJourneys(j)
-  }
+  def serve(): DataFrame = graft.etl.Analyze.sequentialAbFromJourneys(
+    journeys.frame(SparkSession.active))
 
   /** The a38-shaped SRM guard over the SAME folded state — one
     * per-user journeys reduction serves both live readouts (the
     * monitor, and the trust check that says whether to believe it;
     * the a33/a34 shared-state pattern). */
-  def serveSrm(): DataFrame = synchronized {
-    val j = journeys.getOrElse(
-      throw new IllegalStateException("no batches folded yet"))
-    graft.etl.Analyze.srmFromJourneys(j)
-  }
+  def serveSrm(): DataFrame =
+    graft.etl.Analyze.srmFromJourneys(journeys.frame(SparkSession.active))
 
   /** The accumulated per-user journeys frame — exposed for specs. */
-  def stateFrame: Option[DataFrame] = synchronized(journeys)
+  def stateFrame: Option[DataFrame] = journeys.current
 
-  protected def reset(): Unit = journeys = None
+  protected def reset(): Unit = journeys.clear()
 }

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** The lifecycle every JVM-state fold in this package shares: the
   * replay guard, the rebuild recipe, the restart guard and the
@@ -33,6 +36,34 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * files only. Feeding a raw directory listing (or any at-least-once
   * sink) here double counts the re-delivered tail; for a SUM-shaped
   * fold that is a silently narrowed or shifted readout, not an error.
+  *
+  * State: most folds hold one of two shapes, and take it from a holder
+  * below rather than hand-coding it. [[FrameState]] is a user-sized
+  * frame merged per batch (`groupBy/agg` or `distinct` over the union
+  * of the state and the batch's partials); [[KeyedSums]] is a small
+  * driver map of long sums per key. The rules, stated once here:
+  *   - Pinning: a merged frame is eagerly `localCheckpoint`ed, so its
+  *     lineage stays one plan deep and it never re-reads a batch whose
+  *     source range the stream has moved past.
+  *   - Lock: each holder reads, merges and writes back under its own
+  *     lock, so a [[rebuildFrom]] reset is never overwritten by a merge
+  *     that started before it. A serve blocks only while a merge runs.
+  *   - Empty serve: before its first batch a holder serves a typed empty
+  *     frame (its DDL), so every serve equals its batch kernel over
+  *     zero rows.
+  * The holders are the swap point for a move to Spark's checkpointed
+  * state store: the folds on them only name their partials, merge and
+  * kernel.
+  *
+  * Folds that keep their own state, and why: [[QuantileStreamFold]]
+  * (its histogram is read directly and it serves by driver
+  * arithmetic), [[TwapStreamFold]] (its mass is a decimal),
+  * [[SeasonalStreamFold]] and [[RollingZStreamFold]] (each keeps a max
+  * beside its sums), [[CusumStreamFold]], [[ReservoirFold]],
+  * [[SpectrumFold]], [[HllStreamFold]], [[MgStreamFold]] and
+  * [[HashedLmFold]] (a sketch, an array or a carry), and the carries of
+  * [[PathStreamFold]] and [[AttributionStreamFold]] (each batch
+  * replaces them rather than merging into them).
   *
   * Three streaming twins stay off this adapter: [[IngestSync]], whose
   * guard is the on-disk version log; [[BloomStreamDedup]], whose fold
@@ -95,4 +126,65 @@ abstract class StreamFold extends Serializable {
     offsets.isDirectory &&
       Option(offsets.listFiles()).exists(_.nonEmpty)
   }
+}
+
+/** A pinned frame merged per batch (the rules are on [[StreamFold]]).
+  * `ddl` types the empty frame served before the first batch; `merge`
+  * reduces the union of the state and a batch's partials. */
+final class FrameState(ddl: String)(merge: DataFrame => DataFrame)
+    extends Serializable {
+
+  private var state: Option[DataFrame] = None
+
+  /** Fold one batch's partials: the first batch's as they are, later
+    * ones merged with the state, pinned either way. */
+  def fold(partials: DataFrame): Unit = synchronized {
+    state = Some(state.fold(partials)(s => merge(s.unionByName(partials)))
+      .localCheckpoint(true))
+  }
+
+  /** The state frame, or the typed empty frame before the first batch. */
+  def frame(spark: SparkSession): DataFrame = current.getOrElse(
+    spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(ddl)))
+
+  /** The state frame; None before the first batch. */
+  def current: Option[DataFrame] = synchronized(state)
+
+  def clear(): Unit = synchronized { state = None }
+}
+
+/** Long sums per key on the driver, for partials of at most a few
+  * thousand rows (the rules are on [[StreamFold]]). `ddl` names the
+  * columns: the first `keys` are the key, the rest are summed. */
+final class KeyedSums(ddl: String, keys: Int) extends Serializable {
+
+  private val schema = StructType.fromDDL(ddl)
+  private val sums = scala.collection.mutable.Map.empty[Seq[Any], Array[Long]]
+
+  /** Collect a partial frame (columns by position, as in `ddl`) and add
+    * its sums per key. */
+  def add(partials: DataFrame): Unit = {
+    val rows = partials.toDF(schema.fieldNames.toIndexedSeq: _*)
+      .select(schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .collect()
+    synchronized {
+      rows.foreach { r =>
+        val s = sums.getOrElseUpdate(r.toSeq.take(keys),
+          new Array[Long](schema.size - keys))
+        s.indices.foreach(i => s(i) += r.getLong(keys + i))
+      }
+    }
+  }
+
+  /** The sums of one key (zeros if it was never added). */
+  def apply(key: Any*): Seq[Long] = synchronized(
+    sums.get(key).fold(Seq.fill(schema.size - keys)(0L))(_.toSeq))
+
+  /** The sums as a local frame with the declared schema. */
+  def frame(spark: SparkSession): DataFrame = {
+    val rows = synchronized(sums.toList.map { case (k, s) => Row.fromSeq(k ++ s) })
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  def clear(): Unit = synchronized(sums.clear())
 }

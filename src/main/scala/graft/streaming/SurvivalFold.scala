@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A29's streaming twin — the live Kaplan-Meier retention monitor. The
@@ -14,10 +14,7 @@ import org.apache.spark.sql.functions._
   * the died-out guard, and the exp(Σ ln) fold are the batch op's own
   * and parity is exact by construction.
   *
-  * State is a DataFrame, not a driver structure (the ActiveUsersFold
-  * discipline): the spans frame lives distributed, eager
-  * `localCheckpoint` per fold truncates the accumulated-union lineage
-  * (the g1 fixpoint device), and its size is bounded by |users|
+  * State is a [[FrameState]] whose size is bounded by |users|
   * whatever the event volume. Min/max make the fold IDEMPOTENT — a
   * replayed micro-batch merges to a content no-op even without the
   * batchId replay guard. Restart is [[rebuildFrom]] over the landed
@@ -33,33 +30,23 @@ import org.apache.spark.sql.functions._
   * the serve, not the fold. */
 class SurvivalStreamFold extends StreamFold {
 
-  private var spans: Option[DataFrame] = None
+  private val spans =
+    new FrameState("user_id BIGINT, first_day BIGINT, last_day BIGINT")(
+      _.groupBy(col("user_id")).agg(min(col("first_day")).as("first_day"),
+        max(col("last_day")).as("last_day")))
 
   /** Fold one micro-batch of raw events (ts, user_id, ...): batch-local
     * distributed reduction, then monoid-merge into the state frame. */
-  def foldBatch(batch: DataFrame): Unit = {
-    val p = graft.etl.Analyze.userSpans(batch)
-    synchronized {
-      val merged = spans.fold(p) { prev =>
-        prev.unionByName(p)
-          .groupBy(col("user_id")).agg(
-            min(col("first_day")).as("first_day"),
-            max(col("last_day")).as("last_day"))
-      }.localCheckpoint(true)
-      spans = Some(merged)
-    }
-  }
+  def foldBatch(batch: DataFrame): Unit =
+    spans.fold(graft.etl.Analyze.userSpans(batch))
 
   /** The a29 report over everything folded so far, through the SAME
     * kernel as the batch query. */
-  def serve(): DataFrame = synchronized {
-    val s = spans.getOrElse(
-      throw new IllegalStateException("no batches folded yet"))
-    graft.etl.Analyze.survivalFromSpans(s)
-  }
+  def serve(): DataFrame =
+    graft.etl.Analyze.survivalFromSpans(spans.frame(SparkSession.active))
 
   /** The accumulated per-user spans frame — exposed for specs. */
-  def stateFrame: Option[DataFrame] = synchronized(spans)
+  def stateFrame: Option[DataFrame] = spans.current
 
-  protected def reset(): Unit = spans = None
+  protected def reset(): Unit = spans.clear()
 }

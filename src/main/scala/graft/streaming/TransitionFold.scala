@@ -12,13 +12,12 @@ import org.apache.spark.sql.functions._
   * users-sized carry join, counts merged additively.
   *
   * State splits by size class, each stored where it belongs:
-  * - transition counts: ≤ |types|² cells — a driver map (the a18/t9
-  *   bounded-collect discipline), merged additively per batch;
-  * - per-user last event: USER-sized, so it lives as a DISTRIBUTED
-  *   frame (the ActiveUsersFold discipline — a driver map here would
-  *   cap the design at driver memory), eagerly checkpointed per fold
-  *   to truncate the union lineage. The boundary join is user-keyed
-  *   and AQE-handled; nothing event-sized ever accumulates.
+  * - transition counts: ≤ |types|² cells — [[KeyedSums]], merged
+  *   additively per batch;
+  * - per-user last event: USER-sized, so it is a [[FrameState]] (a
+  *   driver map here would cap the design at driver memory). The
+  *   boundary join is user-keyed and AQE-handled; nothing event-sized
+  *   ever accumulates.
   *
   * Additive counts ⇒ a foreachBatch RETRY must not double-fold:
   * [[onBatch]] carries the batchId and drops replays (the QuantileFold
@@ -32,62 +31,42 @@ import org.apache.spark.sql.functions._
 class TransitionStreamFold extends StreamFold {
 
   private val counts =
-    scala.collection.mutable.Map.empty[(String, String), Long]
-  private var lastByUser: Option[DataFrame] = None
+    new KeyedSums("prev_type STRING, next_type STRING, n BIGINT", keys = 2)
+  // roll the carry forward: users seen this batch take their new last;
+  // unseen users keep the old one (max_by on event_id under the
+  // monotone-id contract picks exactly that)
+  private val lastByUser =
+    new FrameState("user_id BIGINT, last_id BIGINT, last_type STRING")(
+      _.groupBy(col("user_id")).agg(max(col("last_id")).as("last_id"),
+        max_by(col("last_type"), col("last_id")).as("last_type")))
 
   /** Fold one micro-batch of raw events (event_id, user_id,
     * event_type, ...). */
   def foldBatch(batch: DataFrame): Unit = {
     val b = batch.select(col("event_id"), col("user_id"), col("event_type"))
-      .localCheckpoint(true) // consumed three times below
+      .localCheckpoint(true) // consumed twice below
     // batch-internal adjacency through the SHARED batch kernel
-    val internal = graft.etl.Analyze.transitionPairs(b).collect()
+    counts.add(graft.etl.Analyze.transitionPairs(b))
     // per-user first/last of THIS batch ((event_id) order, one agg)
     val ends = b.groupBy(col("user_id")).agg(
       min_by(col("event_type"), col("event_id")).as("first_type"),
       max(col("event_id")).as("last_id"),
       max_by(col("event_type"), col("event_id")).as("last_type"))
       .localCheckpoint(true)
-    synchronized {
-      internal.foreach { r =>
-        val k = (r.getString(0), r.getString(1))
-        counts(k) = counts.getOrElse(k, 0L) + r.getLong(2)
-      }
-      // boundary pairs: carried last event → this batch's first event
-      lastByUser.foreach { carry =>
-        val boundary = carry
-          .join(ends.select(col("user_id"), col("first_type")), "user_id")
-          .groupBy(col("last_type").as("prev_type"),
-            col("first_type").as("next_type"))
-          .agg(count(lit(1)).as("n"))
-          .collect()
-        boundary.foreach { r =>
-          val k = (r.getString(0), r.getString(1))
-          counts(k) = counts.getOrElse(k, 0L) + r.getLong(2)
-        }
-      }
-      // roll the carry forward: users seen this batch take their new
-      // last; unseen users keep the old one (max_by on event_id under
-      // the monotone-id contract picks exactly that)
-      val batchLast = ends.select(col("user_id"), col("last_id"),
-        col("last_type"))
-      val merged = lastByUser.fold(batchLast)(_.unionByName(batchLast)
-          .groupBy(col("user_id")).agg(
-            max(col("last_id")).as("last_id"),
-            max_by(col("last_type"), col("last_id")).as("last_type")))
-        .localCheckpoint(true)
-      lastByUser = Some(merged)
+    // boundary pairs: carried last event → this batch's first event
+    lastByUser.current.foreach { carry =>
+      counts.add(carry
+        .join(ends.select(col("user_id"), col("first_type")), "user_id")
+        .groupBy(col("last_type"), col("first_type"))
+        .agg(count(lit(1))))
     }
+    lastByUser.fold(ends.select(col("user_id"), col("last_id"), col("last_type")))
   }
 
   /** The a25-shaped report over everything folded so far, through the
     * SAME report kernel as the batch query. */
-  def serve(spark: SparkSession): DataFrame = synchronized {
-    import spark.implicits._
-    val pairs = counts.toSeq.map { case ((p, n), c) => (p, n, c) }
-      .toDF("prev_type", "next_type", "n")
-    graft.etl.Analyze.transitionReport(pairs)
-  }
+  def serve(spark: SparkSession): DataFrame =
+    graft.etl.Analyze.transitionReport(counts.frame(spark))
 
-  protected def reset(): Unit = { counts.clear(); lastByUser = None }
+  protected def reset(): Unit = { counts.clear(); lastByUser.clear() }
 }

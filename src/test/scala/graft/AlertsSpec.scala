@@ -55,7 +55,7 @@ class AlertsSpec extends AnyFunSuite {
   test("snapshot serves from cache within TTL and reloads on refresh (T8)") {
     import spark.implicits._
     var loads = 0
-    val snap = new Snapshot(spark, "t8_snap", ttlMs = 60 * 60 * 1000, () => {
+    val snap = new Snapshot("t8_snap", ttlMs = 60 * 60 * 1000, () => {
       loads += 1
       Seq((1, "a"), (2, "b")).toDF("id", "v")
     })
@@ -65,7 +65,7 @@ class AlertsSpec extends AnyFunSuite {
     assert(spark.table("t8_snap").count() == 2) // SQL-visible
     snap.refresh()
     assert(loads == 2) // the manual refresh button
-    val stale = new Snapshot(spark, "t8_snap2", ttlMs = 0, () => {
+    val stale = new Snapshot("t8_snap2", ttlMs = 0, () => {
       loads += 1; Seq((1, "a")).toDF("id", "v")
     })
     stale.frame(); Thread.sleep(5); stale.frame()

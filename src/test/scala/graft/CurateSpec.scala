@@ -135,7 +135,7 @@ class CurateSpec extends AnyFunSuite {
       (4L, Array(0f, 1f, 0f, 0f), "a"),  // orthogonal — must survive
       (5L, Array(0f, 0f, 1f, 0f), "b")
     ).toDF("vec_id", "embedding", "label")
-    val kept = Curate.semanticDedupDf(spark, vecs, k = 2, threshold = 0.9)
+    val kept = Curate.semanticDedupDf(vecs, k = 2, threshold = 0.9)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(0L, 4L, 5L))
   }
@@ -156,7 +156,7 @@ class CurateSpec extends AnyFunSuite {
       (1L, Array(1f, 0f, 0f, 0f), "a"),
       (2L, Array(0f, 1f, 0f, 0f), "a")
     ).toDF("vec_id", "embedding", "label")
-    val kept = Curate.semanticDedupDf(spark, vecs, k = 2, threshold = 0.9)
+    val kept = Curate.semanticDedupDf(vecs, k = 2, threshold = 0.9)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(0L, 1L, 2L))
   }
@@ -182,7 +182,7 @@ class CurateSpec extends AnyFunSuite {
       (1L, Array(0f, 1f, 0f, 0f), "a"),
       (2L, Array(0f, 0f, 1f, 0f), "b")
     ).toDF("vec_id", "embedding", "label")
-    val kept = Curate.semanticDedupDf(spark, vecs, k = 2, threshold = 0.9)
+    val kept = Curate.semanticDedupDf(vecs, k = 2, threshold = 0.9)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(0L, 1L, 2L))
   }

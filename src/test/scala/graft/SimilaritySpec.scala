@@ -46,7 +46,7 @@ class SimilaritySpec extends AnyFunSuite {
       (7L, Array(1f, 1f, 0f, 0f)), // cos .7071 to both queries
       (8L, Array(0f, 0f, 1f, 0f))  // orthogonal to both
     ).toDF("vec_id", "embedding")
-    val rows = Similarity.knnJoinDf(spark, vecs,
+    val rows = Similarity.knnJoinDf(vecs,
         vecs.filter(col("vec_id") % 3 === 0), k = 2)
       .as[(Long, Long, Double)].collect().toList
     assert(rows == List(
@@ -64,7 +64,7 @@ class SimilaritySpec extends AnyFunSuite {
       (2L, Array(1f, 1f, 0f, 0f)),
       (6L, Array(0f, 0f, 0f, 0f))  // zero-norm QUERY (6 % 3 == 0)
     ).toDF("vec_id", "embedding")
-    val rows = Similarity.knnJoinDf(spark, vecs,
+    val rows = Similarity.knnJoinDf(vecs,
         vecs.filter(col("vec_id") % 3 === 0), k = 2)
       .as[(Long, Long, Double)].collect().toList
     assert(rows == List((0L, 2L, 0.7071))) // no NaN rows for either query
@@ -78,7 +78,7 @@ class SimilaritySpec extends AnyFunSuite {
       (4L, Array(1f, 4f, 0f, 0f)), // cos .2425 → out at tau .5
       (5L, Array(0f, 1f, 0f, 0f))  // cos 0 → out
     ).toDF("vec_id", "embedding")
-    val rows = Similarity.radiusJoinDf(spark, vecs,
+    val rows = Similarity.radiusJoinDf(vecs,
         vecs.filter(col("vec_id") === 0), tau = 0.5)
       .as[(Long, Long, Double)].collect().toList
     assert(rows == List((0L, 2L, 0.7071)))
@@ -91,9 +91,9 @@ class SimilaritySpec extends AnyFunSuite {
       (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 17) % 13 - 6).toFloat / 7f))
     }.toDF("vec_id", "embedding")
     val queries = vecs.filter(col("vec_id") % 10 === 0)
-    val radius = Similarity.radiusJoinDf(spark, vecs, queries, tau = 0.4)
+    val radius = Similarity.radiusJoinDf(vecs, queries, tau = 0.4)
       .as[(Long, Long, Double)].collect().toSet
-    val viaKnn = Similarity.knnJoinDf(spark, vecs, queries, k = 30)
+    val viaKnn = Similarity.knnJoinDf(vecs, queries, k = 30)
       .filter(col("cos_sim") >= 0.4)
       .as[(Long, Long, Double)].collect().toSet
     assert(radius == viaKnn)
@@ -105,7 +105,7 @@ class SimilaritySpec extends AnyFunSuite {
       (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 17) % 13 - 6).toFloat / 7f))
     }.toDF("vec_id", "embedding")
     val toDouble = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    val knn = Similarity.knnJoinDf(spark, vecs,
+    val knn = Similarity.knnJoinDf(vecs,
         vecs.filter(col("vec_id") % 10 === 0), k = 5)
       .as[(Long, Long, Double)].collect().groupBy(_._1)
     for ((qId, got) <- knn) {
@@ -162,7 +162,7 @@ class SimilaritySpec extends AnyFunSuite {
         .as[(Long, Double)].collect().toMap
     }
     for (nPlanes <- Seq(4, 8)) {
-      val ann = Similarity.sim2AnnLshDf(spark, e, nPlanes)
+      val ann = Similarity.sim2AnnLshDf(e, nPlanes)
         .as[(Long, Double)].collect().toMap
       assert(ann.nonEmpty, s"empty ANN result at $nPlanes planes")
       ann.foreach { case (id, c) => assert(math.abs(truth(id) - c) < 1e-9) }
@@ -272,7 +272,7 @@ class SimilaritySpec extends AnyFunSuite {
     // plane-by-plane fill), so an 8-plane bucket refines a 6-plane bucket:
     // raising the plane count can only DROP candidate pairs, never invent.
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    def pairs(n: Int) = Similarity.sim3NearDupPairsDf(spark, e, n)
+    def pairs(n: Int) = Similarity.sim3NearDupPairsDf(e, n)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val p6 = pairs(6); val p8 = pairs(8)
     assert(p6.nonEmpty)
@@ -309,7 +309,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val idx = Similarity.pqIndex(vecs.toDF("vec_id", "embedding"), m = 4, k = 8)
     val q = vecs.head._2.map(_.toDouble)
-    val top = Similarity.pqQuery(spark, idx, q, topK = 10,
+    val top = Similarity.pqQuery(idx, q, topK = 10,
       excludeVecId = Some(0L)).collect().map(_.getLong(0))
     assert(top.length == 10)
     assert(top.forall(_ < 20L), s"foreign cluster in ${top.mkString(",")}")
@@ -342,7 +342,7 @@ class SimilaritySpec extends AnyFunSuite {
     val idx = Similarity.pqIndexFor(spark, dir)
     assert(Similarity.pqServe(spark, dir, idx, queryVecId = -1L).count() == 0)
     val e = intercept[IllegalArgumentException] {
-      Similarity.pqQuery(spark, idx, Array(1.0, 2.0), topK = 5)
+      Similarity.pqQuery(idx, Array(1.0, 2.0), topK = 5)
     }
     assert(e.getMessage.contains("query dim"))
   }
@@ -437,7 +437,7 @@ class SimilaritySpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
     // pool large enough to admit every candidate → rerank sees all →
     // result must equal the exact brute-force ranking
-    val full = Similarity.binaryAnn(spark, vecs, 0L, topK = 10, pool = 40)
+    val full = Similarity.binaryAnn(vecs, 0L, topK = 10, pool = 40)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("s15").toString
     vecs.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -451,7 +451,7 @@ class SimilaritySpec extends AnyFunSuite {
       (i.toLong, Array.tabulate(64)(d =>
         (((i * 31 + d * 17) % 13) - 6).toFloat / 7f))
     }.toDF("vec_id", "embedding")
-    val full = Similarity.int8Ann(spark, vecs, 0L, topK = 10, pool = 40)
+    val full = Similarity.int8Ann(vecs, 0L, topK = 10, pool = 40)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("s21").toString
     vecs.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -474,7 +474,7 @@ class SimilaritySpec extends AnyFunSuite {
       (1 to 5).map(i => (i.toLong, jig(i / 50f))) ++
       (10 to 30).map(i => (i.toLong,
         swapped.map(v => v * (1 + (i % 4) / 10f))))).toDF("vec_id", "embedding")
-    val got = Similarity.int8Ann(spark, vecs, 0L, topK = 5, pool = 1)
+    val got = Similarity.int8Ann(vecs, 0L, topK = 5, pool = 1)
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L, 3L, 4L, 5L),
       s"int8 candidates missed the query's direction cluster: $got")
@@ -490,7 +490,7 @@ class SimilaritySpec extends AnyFunSuite {
       (1 to 5).map(i => (i.toLong, jig(i / 10f))) ++
       (10 to 30).map(i => (i.toLong,
         anti.map(v => v * (1 + (i % 4) / 10f))))).toDF("vec_id", "embedding")
-    val got = Similarity.binaryAnn(spark, vecs, 0L, topK = 5, pool = 2)
+    val got = Similarity.binaryAnn(vecs, 0L, topK = 5, pool = 2)
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L, 3L, 4L, 5L),
       s"binary candidates missed the query's orthant: $got")
@@ -541,7 +541,7 @@ class SimilaritySpec extends AnyFunSuite {
     val idx = Similarity.ivfPqIndex(vecs.toDF("vec_id", "embedding"),
       kCoarse = 3, m = 4, k = 8)
     val q = vecs.head._2.map(_.toDouble)
-    val top = Similarity.ivfPqQuery(spark, idx, q, nProbe = 1, topK = 10,
+    val top = Similarity.ivfPqQuery(idx, q, nProbe = 1, topK = 10,
       excludeVecId = Some(0L)).collect().map(_.getLong(0))
     assert(top.length == 10)
     assert(top.forall(_ < 20L), s"foreign cluster in ${top.mkString(",")}")
@@ -577,7 +577,7 @@ class SimilaritySpec extends AnyFunSuite {
     val probed = idx.centers.zipWithIndex.map { case (c, i) =>
       (i, c.zip(qn).map { case (a, b) => (a - b) * (a - b) }.sum)
     }.sortBy(_._2).take(2).map(_._1).toSet
-    val cand = Similarity.ivfPqQuery(spark, idx, q, nProbe = 2, topK = 50)
+    val cand = Similarity.ivfPqQuery(idx, q, nProbe = 2, topK = 50)
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     val cells = idx.codes.filter($"vec_id".isin(cand.toSeq.map(Long.box): _*))
       .select($"cell").collect().map(_.getInt(0)).toSet
@@ -677,7 +677,7 @@ class SimilaritySpec extends AnyFunSuite {
     // full-corpus overfetch ⇒ identical to sim1 row for row
     val brute = Similarity.sim1CosineTopK(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val degen = Similarity.matryoshkaTopK(spark,
+    val degen = Similarity.matryoshkaTopK(
       graft.Tables.embeddings(spark, "/root/testdata/sf0.001"),
       overfetch = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
@@ -699,7 +699,7 @@ class SimilaritySpec extends AnyFunSuite {
                                            // copy, weak prefix (.7071)
     ).toDF("vec_id", "embedding")
     // the scaled copy is rank 1 with BOTH scores exactly 1.0, at any C
-    val tight = Similarity.matryoshkaTopK(spark, emb, overfetch = 2, k = 3)
+    val tight = Similarity.matryoshkaTopK(emb, overfetch = 2, k = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(tight.head == ((1L, 1.0, 1.0)), s"got ${tight.toSeq}")
     // at C = 2 the candidates are {copy, vec4} — vec5 (the best
@@ -710,7 +710,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!tight.map(_._1).contains(2L),
       "a zero prefix must drop, not outrank numbers")
     // at C = corpus the same neighbor is found and outranks the fillers
-    val wide = Similarity.matryoshkaTopK(spark, emb,
+    val wide = Similarity.matryoshkaTopK(emb,
       overfetch = Int.MaxValue, k = 3)
       .collect().map(r => r.getLong(0))
     assert(wide.take(2).toSeq == Seq(1L, 5L), s"got ${wide.toSeq}")
@@ -732,7 +732,7 @@ class SimilaritySpec extends AnyFunSuite {
       (0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)),
       (2L, Array(1f, 0.2f, 0f, 0f)), (3L, Array(0.5f, 0.5f, 0f, 0f))
     ).toDF("vec_id", "embedding")
-    val out = Similarity.hybridRrf(spark, docs, emb, queryVecId = 0L)
+    val out = Similarity.hybridRrf(docs, emb, queryVecId = 0L)
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getInt(1)),
         if (r.isNullAt(2)) None else Some(r.getInt(2)),
@@ -750,7 +750,7 @@ class SimilaritySpec extends AnyFunSuite {
     val idx = Similarity.ivfPqIndexFor(spark, dir)
     assert(Similarity.ivfPqServe(spark, dir, idx, queryVecId = -1L).count() == 0)
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqQuery(spark, idx, Array(1.0, 2.0), nProbe = 1)
+      Similarity.ivfPqQuery(idx, Array(1.0, 2.0), nProbe = 1)
     }
     assert(e.getMessage.contains("query dim"))
   }

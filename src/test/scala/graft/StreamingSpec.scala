@@ -760,6 +760,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(s1 == Set((9L, "fp_f")) && s2 == s1)
   }
 
+  test("d1' Bloom stream dedup: a batch whose sink throws lands in full " +
+    "when the query restarts on the same object and checkpoint") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val dd = new graft.streaming.BloomStreamDedup(10000, 1e-6)
+    val in = MemoryStream[(Long, String)]
+    val ckpt = java.nio.file.Files.createTempDirectory("bloomsink").toString
+    val landed = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    def run() = dd.start(in.toDF().toDF("doc_id", "fp"), "fp", ckpt) { fresh =>
+      if (calls.incrementAndGet() == 2) throw new RuntimeException("sink down")
+      landed ++= fresh.as[(Long, String)].collect()
+    }
+    val q = run()
+    in.addData((1L, "fp_a"), (2L, "fp_b"), (3L, "fp_c"))
+    q.processAllAvailable()
+    // batch 2's sink throws: the query dies with the batch uncommitted
+    in.addData((4L, "fp_b"), (5L, "fp_d"), (6L, "fp_d"), (7L, "fp_e"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    // the restart re-delivers batch 2; its keys must still read unseen
+    val q2 = run()
+    q2.processAllAvailable()
+    q2.stop()
+    assert(landed.map(_._2).sorted ==
+      Seq("fp_a", "fp_b", "fp_c", "fp_d", "fp_e"), landed.mkString(", "))
+    assert(dd.seen("fp_d") && dd.seen("fp_e"))
+  }
+
   test("a12' HLL cardinality stream: per-batch sketch folds equal the " +
     "one-shot batch sketch EXACTLY (register-max mergeability)") {
     import spark.implicits._
@@ -2618,6 +2649,107 @@ class StreamingSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       f3.start(df(Seq.empty), ckpt)
     }
+  }
+
+  test("empty serve: before any batch, every serve of a fold on FrameState " +
+    "or KeyedSums equals its batch kernel over zero rows") {
+    import graft.etl.Analyze
+    import graft.ext.WindowFns
+    import graft.streaming._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types.StructType
+    def empty(ddl: String) = spark.createDataFrame(
+      java.util.List.of[Row](), StructType.fromDDL(ddl))
+    val ev = empty("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE")
+    val split = 5L
+    val users = Analyze.userPrePostCents(ev, lit(split))
+    val refCounts = Map(0 -> 3L, 1 -> 1L)
+    val refCells = spark.createDataFrame(
+      java.util.List.of(Row(0), Row(0), Row(0), Row(1)), StructType.fromDDL("cell INT"))
+    val pairs: Seq[(String, () => DataFrame, DataFrame)] = Seq(
+      ("a27' ab", () => new AbTestStreamFold().serve(spark), Analyze.abTest(ev)),
+      ("a22' active users", () => new ActiveUsersStreamFold().serve(),
+        Analyze.activeUsers(ev)),
+      ("w9' cohort", () => new CohortStreamFold().serve(spark),
+        WindowFns.cohortFromWeeks(WindowFns.userWeeks(ev))),
+      ("w12' concurrency", () => new ConcurrencyStreamFold().serve(),
+        WindowFns.concurrencyCurve(empty("start_s BIGINT, end_s BIGINT"))),
+      ("a33' mann-whitney", () => new MannWhitneyFold().serve(spark),
+        Analyze.mannWhitney(ev)),
+      ("a34' ks", () => new MannWhitneyFold().serveKs(spark), Analyze.ksTest(ev)),
+      ("a36' bh panel", () => new MetricPanelFold().serve(spark), Analyze.bhPanel(ev)),
+      ("a37' power", () => new MetricPanelFold().serveMde(spark), Analyze.powerMde(ev)),
+      ("a28' rfm", () => new RfmStreamFold().serve(spark), Analyze.rfmSegments(ev)),
+      ("a29' survival", () => new SurvivalStreamFold().serve(),
+        Analyze.survivalCurve(ev)),
+      ("a32' sequential ab", () => new SeqAbStreamFold().serve(),
+        Analyze.sequentialAb(ev)),
+      ("a38' srm", () => new SeqAbStreamFold().serveSrm(), Analyze.srmGuard(ev)),
+      ("a35' cuped", () => new CupedFold(split).serve(spark),
+        Analyze.cupedFromUsers(users)),
+      ("a39' did", () => new CupedFold(split).serveDid(spark),
+        Analyze.didFromUsers(users)),
+      ("w17' conversion latency", () => new ConversionLatencyFold().serve(),
+        WindowFns.conversionLatency(ev)),
+      ("a31' path", () => new PathStreamFold().serve(spark), Analyze.pathMining(ev)),
+      ("a25' transition", () => new TransitionStreamFold().serve(spark),
+        Analyze.eventTransitions(ev)),
+      ("w15' ewma", () => new EwmaStreamFold().serve(spark), WindowFns.ewmaBaseline(ev)),
+      ("w16' day over day", () => new DayOverDayStreamFold().serve(spark),
+        WindowFns.dayOverDay(ev)),
+      ("w14' rolling corr", () => new RollingCorrStreamFold().serve(spark),
+        WindowFns.rollingCorr(ev)),
+      ("a41' benford", () => new BenfordFold().serve(spark),
+        Analyze.benfordFromCounts(Analyze.benfordDigitCounts(ev))),
+      ("a43' bootstrap", () => new BootstrapFold().serve(spark),
+        Analyze.bootstrapCiFromSums(Analyze.bootstrapReplicaSums(ev),
+          Analyze.bootstrapRawSums(ev))),
+      ("sim28' cell drift", () => new CellDriftFold(refCounts, k = 4).serve(spark),
+        graft.ext.Similarity.cellOccupancyPsi(refCells, empty("cell INT"), k = 4)),
+      ("a30' attribution", () => new AttributionStreamFold().serve(spark),
+        Analyze.lastTouchAttribution(ev)))
+    // the schema and rows, or the error a kernel raises over zero rows
+    def outcome(df: => DataFrame) = scala.util.Try {
+      val d = df
+      (d.schema.map(f => (f.name, f.dataType)), d.collect().map(_.toString).toSeq)
+    }.toEither.left.map(e => s"${e.getClass.getName}: ${e.getMessage.linesIterator.next()}")
+    val failures = pairs.flatMap { case (name, serve, batch) =>
+      val (got, want) = (outcome(serve()), outcome(batch))
+      if (got == want) None else Some(s"$name: $got != $want")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("two state holders: outside StreamFold.scala, streaming/ keeps no " +
+    "Option[DataFrame] state and pins no merge but the named leftovers; " +
+    "Profile.scala is gone") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val dir = Paths.get("src/main/scala/graft/streaming")
+    val stateVar = "var \\w+\\s*:\\s*Option\\[DataFrame\\]".r
+    // file -> (Option[DataFrame] vars, localCheckpoint(true) pins)
+    val leftovers = Map(
+      "PathFold.scala" -> (1, 2),        // the carry each batch replaces
+      "AttributionFold.scala" -> (1, 2), // the carry each batch replaces
+      "TransitionFold.scala" -> (0, 2),  // the batch and its ends, batch-local
+      "BloomDedup.scala" -> (0, 1),      // the survivor snapshot; off the adapter
+      "CdcApply.scala" -> (0, 2),        // snapshot merge; off the adapter
+      "Materialize.scala" -> (1, 0))     // a TTL cache, not a fold
+    val found = Files.list(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "StreamFold.scala")
+      .map { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        p.getFileName.toString -> (stateVar.findAllIn(src).size,
+          src.split(java.util.regex.Pattern.quote(".localCheckpoint(true)"), -1).length - 1)
+      }.filter(_._2 != (0, 0)).toMap
+    assert(found == leftovers, s"found $found")
+    val holders = new String(
+      Files.readAllBytes(dir.resolve("StreamFold.scala")), "UTF-8")
+    assert(holders.contains("final class FrameState") &&
+      holders.contains("final class KeyedSums"))
+    assert(!Files.exists(Paths.get("src/main/scala/graft/Profile.scala")))
   }
 
   test("one fold adapter: only StreamFold.scala and the three twins off " +
